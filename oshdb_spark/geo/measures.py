@@ -45,18 +45,22 @@ def _seg_lengths_m(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     return EARTH_RADIUS * np.sum(np.sqrt(d_lng * d_lng + d_lat * d_lat), axis=1)
 
 
-def _length_slow(buf) -> float:
-    g = G.from_wkb(bytes(buf))
-    if g is None:
-        return 0.0
+def _linear_length(g) -> float:
+    """Sum over every linear component, collections included at any
+    depth (a relation clipped across an AOI holds MultiLineStrings)."""
     t = g[0]
     if t == "LineString":
         return length_of_line(g[1])
     if t == "MultiLineString":
         return float(sum(length_of_line(c) for c in g[1]))
     if t == "GeometryCollection":
-        return float(sum(length_of_line(c[1]) for c in g[1] if c[0] == "LineString"))
+        return float(sum(_linear_length(c) for c in g[1]))
     return 0.0
+
+
+def _length_slow(buf) -> float:
+    g = G.from_wkb(bytes(buf))
+    return 0.0 if g is None else _linear_length(g)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -132,23 +136,21 @@ def _ring_areas_signed(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     return area * EARTH_RADIUS * EARTH_RADIUS / 2.0
 
 
-def _area_slow(buf) -> float:
-    g = G.from_wkb(bytes(buf))
-    if g is None:
-        return 0.0
+def _areal_area(g) -> float:
+    """Sum over every areal component, collections included at any depth."""
     t = g[0]
     if t == "Polygon":
         return polygon_area(g[1])
     if t == "MultiPolygon":
         return float(sum(polygon_area(rings) for rings in g[1]))
     if t == "GeometryCollection":
-        return float(
-            sum(
-                polygon_area(c[1]) if c[0] == "Polygon" else 0.0
-                for c in g[1]
-            )
-        )
+        return float(sum(_areal_area(c) for c in g[1]))
     return 0.0
+
+
+def _area_slow(buf) -> float:
+    g = G.from_wkb(bytes(buf))
+    return 0.0 if g is None else _areal_area(g)
 
 
 @F.pandas_udf(T.DoubleType())

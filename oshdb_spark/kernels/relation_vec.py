@@ -1,10 +1,7 @@
-"""Vectorized RELATION kernel path: two-level flat member tables.
+"""Vectorized RELATION kernels: the temporal core, one level deeper.
 
-Covers relation docs that can never take the multipolygon assembly path
-(their geometry is a GeometryCollection of member geometries,
-OSHDBGeometryBuilder.java:140-185). The per-doc Python walk is replaced by
-the same batch-global searchsorted as-of pattern as the way fast path
-(kernels.snapshot._flat_way_arrays), one level deeper:
+Relation docs whose members are nodes and ways run through
+kernels.core like ways do; the typed member table resolves
 
     relation version refs (typed) ──► member slot (doc, type, id)
     way-member version refs        ──► node-member slot (doc, node, id)
@@ -18,12 +15,15 @@ reference line-by-line):
   member timestamps inside relation membership windows, where a way
   member's timestamp stream is its own transition timestamps ∪ its node
   children's timestamps inside the WAY's windows
-  (OSHEntities.java:315-478 recursive dispatch)
-- geometry: ordered member geometries; missing members and members with
+  (OSHEntities.java:315-478 recursive dispatch; core.member_window_keys)
+- geometry: a GeometryCollection of the ordered member geometries
+  (OSHDBGeometryBuilder.java:140-185); missing members and members with
   no version yet are skipped (ref :154-163 redaction case); invisible
   nodes → empty Point, invisible ways → empty LineString; visible ways
-  run the way geometry ladder incl. the area decider's closed-ring
-  precheck (BaseTagInterpreter.java:82-86)
+  run the core's way ladder incl. the area decider's closed-ring
+  precheck (BaseTagInterpreter.java:82-86). Multipolygon-typed versions
+  are assembled from the resolved chains instead, falling back to the
+  collection when assembly fails (ref :126-131).
 
 Documented divergences (degenerate-input only, same posture as the way
 kernel's): changeset-map putIfAbsent ties between DIFFERENT members
@@ -34,29 +34,25 @@ coordinates yield empty geometries instead of raising.
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
 
-from ..model import schemas
-from .geometry_builder import DefaultTagInterpreter, NeverArea
-from .snapshot import (
+from .core import (
     _LON_SENTINEL,
-    _area_flags,
-    _doc_tokens,
-    _empty_frame,
-    _flat_bool,
-    _flat_i64,
-    _flat_node_arrays,
-    _way_wkb_nbytes,
-    _way_wkb_write,
+    _segments,
+    contribution_frame,
+    geom_rows,
+    has_refs,
+    member_asof,
+    member_slots,
+    member_table,
+    own_table,
+    parse_tags,
+    ref_rows,
+    snapshot_frame,
+    way_ladder,
 )
-
-_SNAP_COLS = [f.name for f in schemas.SNAPSHOTS.fields]
-_CONTRIB_COLS = [f.name for f in schemas.CONTRIBUTIONS.fields]
-_TS_MASK = (1 << 34) - 1
-_INF = 2**62
+from .geometry_builder import DefaultTagInterpreter, NeverArea
 
 
 def rel_fast_mode(decider) -> str | None:
@@ -73,258 +69,57 @@ def rel_fast_mode(decider) -> str | None:
     return None
 
 
-def _flat_rel_arrays(pdf: pd.DataFrame) -> dict:
-    """Batch-global flat typed-ref + member tables for relation fast docs.
+def rel_geometry(o: dict, mt: dict, decider):
+    """Geometry of relation states: per row the components of its
+    GeometryCollection, in ref order (ref list of own version `idx`);
+    multipolygon-typed rows get the assembled geometry as an override."""
 
-    Same slot construction as the way path's _flat_way_arrays, with the
-    member key extended to (doc, entity_type, id) — stride-3 type radix so
-    node/way members sharing an id never collide, and ref type 2 ('other',
-    always a missing member) can never match a slot."""
-    n_docs = len(pdf)
-    refcnt = _flat_i64(pdf["rvrefcnt"])
-    ref_flat = _flat_i64(pdf["rvref"])
-    reftype = _flat_i64(pdf["rvreftype"])
-    refrole = (
-        np.concatenate([np.asarray(v, dtype=object) for v in pdf["rvrefrole"]])
-        if n_docs
-        else np.empty(0, dtype=object)
-    )
-    ref_starts = np.cumsum(refcnt) - refcnt
-
-    nm = np.fromiter((len(v) for v in pdf["rmid"]), dtype=np.int64, count=n_docs)
-    mem_doc = np.repeat(np.arange(n_docs, dtype=np.int64), nm)
-    mem_id = _flat_i64(pdf["rmid"])
-    mem_type = _flat_i64(pdf["rmtype"])
-    m_lens = _flat_i64(pdf["rmvcnt"])
-    m_starts = np.cumsum(m_lens) - m_lens
-    slot_of_ver = np.repeat(np.arange(len(mem_id), dtype=np.int64), m_lens)
-    m_ts = _flat_i64(pdf["rmts"])
-    m_ver = _flat_i64(pdf["rmver"])
-    m_vis = _flat_bool(pdf["rmvis"])
-    m_lon = _flat_i64(pdf["rmlon"], fill=_LON_SENTINEL)
-    m_lat = _flat_i64(pdf["rmlat"], fill=_LON_SENTINEL)
-    m_cs = _flat_i64(pdf["rmcs"])
-    m_uid = _flat_i64(pdf["rmuid"])
-    m_refcnt = _flat_i64(pdf["rmrefcnt"])
-    m_ref = _flat_i64(pdf["rmref"])
-    m_tags = (
-        np.concatenate([np.asarray(v, dtype=object) for v in pdf["rmtags"]])
-        if n_docs
-        else np.empty(0, dtype=object)
-    )
-    null_tags = pd.isna(m_tags)
-    if null_tags.any():
-        m_tags = np.where(null_tags, "{}", m_tags)
-
-    # sort member versions (ts, version) within each slot — done HERE
-    # (one lexsort over flat primitives) instead of a JVM array_sort that
-    # would re-materialize every member struct; a no-op permutation (the
-    # usual already-sorted store) costs one comparison pass
-    if len(m_ts):
-        order = np.lexsort((m_ver, m_ts, slot_of_ver))
-        if not np.array_equal(order, np.arange(len(order))):
-            m_ts, m_ver, m_vis = m_ts[order], m_ver[order], m_vis[order]
-            m_lon, m_lat = m_lon[order], m_lat[order]
-            m_cs, m_uid, m_tags = m_cs[order], m_uid[order], m_tags[order]
-            old_starts = np.cumsum(m_refcnt) - m_refcnt
-            m_refcnt = m_refcnt[order]
-            total_ref = int(m_refcnt.sum())
-            if total_ref:
-                rr = np.repeat(old_starts[order], m_refcnt) + (
-                    np.arange(total_ref, dtype=np.int64)
-                    - np.repeat(np.cumsum(m_refcnt) - m_refcnt, m_refcnt)
-                )
-                m_ref = m_ref[rr]
-
-    all_ids = np.unique(np.concatenate([mem_id, ref_flat, m_ref]))
-    k_ids = max(len(all_ids), 1)
-    mem_key = (mem_doc * 3 + mem_type) * k_ids + np.searchsorted(all_ids, mem_id)
-    order = np.argsort(mem_key)
-    return {
-        "refcnt": refcnt,
-        "ref_flat": ref_flat,
-        "reftype": reftype,
-        "refrole": refrole,
-        "ref_starts": ref_starts,
-        "mem_doc": mem_doc,
-        "mem_id": mem_id,
-        "mem_type": mem_type,
-        "m_lens": m_lens,
-        "m_starts": m_starts,
-        "slot_of_ver": slot_of_ver,
-        "m_ts": m_ts,
-        "m_combined": slot_of_ver * (1 << 34) + m_ts,
-        "m_vis": m_vis,
-        "m_lon": m_lon,
-        "m_lat": m_lat,
-        "m_cs": m_cs,
-        "m_uid": m_uid,
-        "m_tags": m_tags,
-        "m_refcnt": m_refcnt,
-        "m_ref": m_ref,
-        "m_ref_starts": np.cumsum(m_refcnt) - m_refcnt,
-        "all_ids": all_ids,
-        "k_ids": k_ids,
-        "sorted_mem_keys": mem_key[order],
-        "mem_order": order,
-    }
-
-
-def _rel_member_slots(ra: dict, doc: np.ndarray, rtype: np.ndarray, rid: np.ndarray):
-    """(slot, found) per (doc, ref_type, id) — typed member lookup."""
-    sk = ra["sorted_mem_keys"]
-    if len(sk) == 0:
-        z = np.zeros(len(doc), dtype=np.int64)
-        return z, np.zeros(len(doc), dtype=bool)
-    keys = (doc * 3 + rtype) * ra["k_ids"] + np.searchsorted(ra["all_ids"], rid)
-    pos = np.minimum(np.searchsorted(sk, keys), len(sk) - 1)
-    found = sk[pos] == keys
-    return np.where(found, ra["mem_order"][pos], 0), found
-
-
-def _rel_member_asof(ra: dict, slot: np.ndarray, found: np.ndarray, t: np.ndarray):
-    """(version_index, exists) — exists means the member HAS a version at
-    or before t (the reference's `_asof is None` skip is ¬exists;
-    visibility is decided by the caller per the geometry rules)."""
-    if len(ra["m_combined"]) == 0:
-        return np.zeros(len(slot), dtype=np.int64), np.zeros(len(slot), dtype=bool)
-    mpos = np.searchsorted(ra["m_combined"], slot * (1 << 34) + t, side="right") - 1
-    exists = found & (mpos >= ra["m_starts"][slot])
-    return np.where(exists, mpos, 0), exists
-
-
-def _resolve_rel_components(
-    ra: dict, sdoc: np.ndarray, st: np.ndarray, ps_refs: np.ndarray, decider
-) -> dict:
-    """Component structure of each output row's GeometryCollection.
-
-    ps_refs = own-version index per output row (ref lists read from it).
-    Returns flat per-component (kind, ncoords, coord segments) plus
-    per-row component/coordinate offsets — comparison- and WKB-ready.
-    Kind codes are _way_wkb_vec's (0 empty Point, 1 Point, 2 LineString,
-    3 Polygon, 4 empty LineString)."""
-    n_rows = len(sdoc)
-    rn = ra["refcnt"][ps_refs]
-    total = int(rn.sum())
-    crow = np.repeat(np.arange(n_rows, dtype=np.int64), rn)
-    local = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(rn) - rn, rn)
-    goff = np.repeat(ra["ref_starts"][ps_refs], rn) + local
-    cref = ra["ref_flat"][goff]
-    ctype = ra["reftype"][goff]
-    slot, found = _rel_member_slots(ra, sdoc[crow], ctype, cref)
-    mp, exists = _rel_member_asof(ra, slot, found, st[crow])
-
-    # included components: member embedded AND has a version as-of t
-    inc = exists
-    crow_i = crow[inc]
-    mp_i = mp[inc]
-    ctype_i = ctype[inc]
-    n_inc = len(crow_i)
-
-    comp_kind = np.zeros(n_inc, dtype=np.int64)
-    comp_nc = np.zeros(n_inc, dtype=np.int64)
-
-    is_node = ctype_i == 0
-    is_way = ctype_i == 1
-    node_pt = is_node & ra["m_vis"][mp_i] & (ra["m_lon"][mp_i] != _LON_SENTINEL)
-    comp_kind[node_pt] = 1
-    comp_nc[node_pt] = 1
-    way_invis = is_way & ~ra["m_vis"][mp_i]
-    comp_kind[way_invis] = 4
-
-    winc = np.nonzero(is_way & ra["m_vis"][mp_i])[0]
-    way_nc = np.zeros(len(winc), dtype=np.int64)
-    way_lon = np.empty(0, dtype=np.int64)
-    way_lat = np.empty(0, dtype=np.int64)
-    wc_row = np.empty(0, dtype=np.int64)
-    if len(winc):
-        wmp = mp_i[winc]
-        wrn = ra["m_refcnt"][wmp]
-        wtotal = int(wrn.sum())
-        wrow = np.repeat(np.arange(len(winc), dtype=np.int64), wrn)
-        wlocal = (
-            np.arange(wtotal, dtype=np.int64)
-            - np.repeat(np.cumsum(wrn) - wrn, wrn)
+    def build(idx, doc, t):
+        row, off = ref_rows(mt["refcnt"], mt["ref_starts"], idx)
+        slot, found = member_slots(mt, doc[row], mt["reftype"][off], mt["ref"][off])
+        mp, exists = member_asof(mt, slot, found, t[row])
+        # included components: member embedded AND has a version as-of t
+        crow, mp, off = row[exists], mp[exists], off[exists]
+        ctype = mt["reftype"][off]
+        kind = np.zeros(len(crow), dtype=np.int64)
+        nc = np.zeros(len(crow), dtype=np.int64)
+        vis = mt["vis"][mp]
+        node_pt = (ctype == 0) & vis & (mt["lon"][mp] != _LON_SENTINEL)
+        kind[node_pt], nc[node_pt] = 1, 1
+        kind[(ctype == 1) & ~vis] = 4
+        winc = np.nonzero((ctype == 1) & vis)[0]
+        wkind, wnc, wlon, wlat, wnid = way_ladder(
+            mt, mt["m_refcnt"], mt["m_ref"], mt["m_ref_starts"], mp[winc],
+            doc[crow[winc]], t[crow[winc]], mt, decider,
         )
-        wref = ra["m_ref"][np.repeat(ra["m_ref_starts"][wmp], wrn) + wlocal]
-        wdoc = sdoc[crow_i[winc]][wrow]
-        wt = st[crow_i[winc]][wrow]
-        nslot, nfound = _rel_member_slots(
-            ra, wdoc, np.zeros(len(wref), dtype=np.int64), wref
+        kind[winc], nc[winc] = wkind, wnc
+        # coords in component order (node points interleave with way
+        # chains): scatter both sources to their component offsets
+        cstart = np.cumsum(nc) - nc
+        lon7 = np.zeros(int(nc.sum()), dtype=np.int64)
+        lat7 = np.zeros_like(lon7)
+        nid = np.zeros_like(lon7)
+        npt = np.nonzero(node_pt)[0]
+        lon7[cstart[npt]] = mt["lon"][mp[npt]]
+        lat7[cstart[npt]] = mt["lat"][mp[npt]]
+        wr, wloc = _segments(wnc)
+        dest = cstart[winc][wr] + wloc
+        lon7[dest], lat7[dest], nid[dest] = wlon, wlat, wnid
+        g = geom_rows(
+            np.bincount(crow, minlength=len(idx)).astype(np.int64),
+            kind, nc, lon7, lat7, nid,
+            ctype=ctype, role=mt["refrole"][off], collection=True,
         )
-        nmp, nexists = _rel_member_asof(ra, nslot, nfound, wt)
-        nvalid = (
-            nexists & ra["m_vis"][nmp] & (ra["m_lon"][nmp] != _LON_SENTINEL)
-        )
-        wc_row = wrow[nvalid]
-        way_lon = ra["m_lon"][nmp[nvalid]]
-        way_lat = ra["m_lat"][nmp[nvalid]]
-        way_nid = wref[nvalid]  # node ids feed multipolygon ring joining
-        way_nc = np.bincount(wc_row, minlength=len(winc)).astype(np.int64)
+        parsed, inv = parse_tags(o)
+        is_mp = np.array(
+            [bool(decider.is_area("relation", tg, [])) for tg in parsed],
+            dtype=bool,
+        )[inv[idx]]
+        if is_mp.any():
+            g["override"] = _mp_assembly_wkb(g, np.nonzero(is_mp)[0], decider)
+        return g
 
-        # area decision on the way member's own tags + ref-id closedness
-        uniq, inv = np.unique(ra["m_tags"][wmp].astype(str), return_inverse=True)
-        parsed = np.array([json.loads(x) for x in uniq], dtype=object)
-        tags_area_u, need_closed = _area_flags(decider, parsed)
-        is_area = tags_area_u[inv]
-        if need_closed and len(ra["m_ref"]):
-            zero = wrn == 0
-            fr = ra["m_ref"][np.where(zero, 0, ra["m_ref_starts"][wmp])]
-            lr = ra["m_ref"][np.where(zero, 0, ra["m_ref_starts"][wmp] + wrn - 1)]
-            is_area &= (wrn >= 4) & (fr == lr)
-        elif need_closed:
-            is_area &= False
-        wcs = np.cumsum(way_nc) - way_nc
-        coords_closed = np.zeros(len(winc), dtype=bool)
-        nz = way_nc >= 4
-        if nz.any():
-            fi, li = wcs[nz], wcs[nz] + way_nc[nz] - 1
-            coords_closed[nz] = (way_lon[fi] == way_lon[li]) & (
-                way_lat[fi] == way_lat[li]
-            )
-        comp_kind[winc] = np.select(
-            [is_area & coords_closed, way_nc >= 2, way_nc == 1], [3, 2, 1], 0
-        )
-        comp_nc[winc] = way_nc
-
-    # coords flattened in component order (node points interleave with
-    # way chains): scatter both sources to their per-component offsets
-    cstart = np.cumsum(comp_nc) - comp_nc
-    n_coords = int(comp_nc.sum())
-    lon7 = np.zeros(n_coords, dtype=np.int64)
-    lat7 = np.zeros(n_coords, dtype=np.int64)
-    nid = np.zeros(n_coords, dtype=np.int64)
-    npt = np.nonzero(node_pt)[0]
-    if len(npt):
-        lon7[cstart[npt]] = ra["m_lon"][mp_i[npt]]
-        lat7[cstart[npt]] = ra["m_lat"][mp_i[npt]]
-    if len(wc_row):
-        wcs2 = np.cumsum(way_nc) - way_nc
-        ranks = np.arange(len(wc_row), dtype=np.int64) - wcs2[wc_row]
-        dest = cstart[winc[wc_row]] + ranks
-        lon7[dest] = way_lon
-        lat7[dest] = way_lat
-        nid[dest] = way_nid
-
-    ncomp = np.bincount(crow_i, minlength=n_rows).astype(np.int64)
-    comp_starts = np.cumsum(ncomp) - ncomp
-    coord_row = np.repeat(crow_i, comp_nc)
-    row_nc = np.bincount(coord_row, minlength=n_rows).astype(np.int64)
-    return {
-        "comp_row": crow_i,
-        "kind": comp_kind,
-        "nc": comp_nc,
-        "ctype": ctype_i,
-        "role": ra["refrole"][goff][inc],
-        "cstart": cstart,
-        "lon7": lon7,
-        "lat7": lat7,
-        "nid": nid,
-        "ncomp": ncomp,
-        "comp_starts": comp_starts,
-        "row_nc": row_nc,
-        "row_coord_starts": np.cumsum(row_nc) - row_nc,
-    }
+    return build
 
 
 def _mp_assembly_wkb(rc: dict, rows, decider) -> dict:
@@ -378,550 +173,20 @@ def _mp_assembly_wkb(rc: dict, rows, decider) -> dict:
     return out
 
 
-def _rel_wkb_vec(rc: dict, rows: np.ndarray | None = None) -> np.ndarray:
-    """GeometryCollection WKB — byte-identical to geo.geom.to_wkb on the
-    general path's collections. Components are written DIRECTLY at their
-    final positions inside each collection (no intermediate buffer, no
-    byte-level index arrays): all offset math is per-component/per-coord.
-    `rows` (sorted, unique) limits encoding to a subset — the
-    contribution kernel only materializes WKB for emitted states."""
-    if rows is None:
-        rows = np.arange(len(rc["ncomp"]), dtype=np.int64)
-    ncomp = rc["ncomp"][rows]
-    n_comp_sel = int(ncomp.sum())
-    sel_starts = np.cumsum(ncomp) - ncomp
-    crow_sel = np.repeat(np.arange(len(rows), dtype=np.int64), ncomp)
-    cidx = (
-        np.repeat(rc["comp_starts"][rows], ncomp)
-        + np.arange(n_comp_sel, dtype=np.int64)
-        - np.repeat(sel_starts, ncomp)
-    )
-    kind_s = rc["kind"][cidx]
-    nc_s = rc["nc"][cidx]
-    nbytes = _way_wkb_nbytes(kind_s, nc_s)
-    payload = np.bincount(crow_sel, weights=nbytes, minlength=len(rows)).astype(
-        np.int64
-    )
-    row_total = 9 + payload
-    row_offs = np.cumsum(row_total) - row_total
-    comp_off = np.cumsum(nbytes) - nbytes  # within concatenated payloads
-    payload_start = np.cumsum(payload) - payload
-    comp_dst = row_offs[crow_sel] + 9 + comp_off - payload_start[crow_sel]
-
-    # coords of the selected comps (contiguous per comp in rc storage)
-    n_coord_sel = int(nc_s.sum())
-    coord_local = np.arange(n_coord_sel, dtype=np.int64) - np.repeat(
-        np.cumsum(nc_s) - nc_s, nc_s
-    )
-    coord_src = np.repeat(rc["cstart"][cidx], nc_s) + coord_local
-    coord_c_row = np.repeat(np.arange(n_comp_sel, dtype=np.int64), nc_s)
-
-    buf = np.zeros(int(row_total.sum()), dtype=np.uint8)
-    buf[row_offs] = 1  # little-endian marker
-    buf[row_offs + 1] = 7  # GeometryCollection
-    for b in range(4):
-        buf[row_offs + 5 + b] = (ncomp >> (8 * b)) & 0xFF
-    _way_wkb_write(
-        buf, comp_dst, kind_s, nc_s, np.cumsum(nc_s) - nc_s, coord_c_row,
-        rc["lon7"][coord_src] * 1e-7, rc["lat7"][coord_src] * 1e-7,
-    )
-    res = np.empty(len(rows), dtype=object)
-    for i, (o, n) in enumerate(zip(row_offs, row_total)):
-        res[i] = buf[o : o + n].tobytes()
-    return res
-
 
 def rels_snapshot_vec(
     pdf: pd.DataFrame, requested: list[int], with_geometry: bool, decider
 ) -> pd.DataFrame:
-    """Vectorized snapshot kernel for fully-inside RELATION docs
-    (CellIterator.iterateByTimestamps semantics; see module docstring)."""
-    fa = _flat_node_arrays(pdf)
-    n_docs, starts = fa["n_docs"], fa["starts"]
-    combined = fa["combined"]
-    vis, match = fa["visible"], fa["match"]
-    ra = _flat_rel_arrays(pdf)
-
-    uniq, inv = np.unique(fa["tags"].astype(str), return_inverse=True)
-    parsed = np.array([json.loads(s) for s in uniq], dtype=object)
-
-    n_ts = len(requested)
-    row_doc = np.tile(np.arange(n_docs, dtype=np.int64), n_ts)
-    row_t = np.repeat(np.asarray(requested, dtype=np.int64), n_docs)
-    pos = np.searchsorted(combined, row_doc * (1 << 34) + row_t, side="right") - 1
-    ok = pos >= starts[row_doc]
-    p = np.where(ok, pos, 0)
-    # zero-member relation versions skip (CellIterator.java:254-257)
-    ok &= vis[p] & match[p] & (ra["refcnt"][p] > 0)
-    sel = np.nonzero(ok)[0]
-    if len(sel) == 0:
-        return _empty_frame(_SNAP_COLS)
-    ps, sdoc, st = pos[sel], row_doc[sel], row_t[sel]
-
-    if with_geometry:
-        rc = _resolve_rel_components(ra, sdoc, st, ps, decider)
-        wkb = _rel_wkb_vec(rc)
-        # multipolygon-typed as-of versions: assembled geometry replaces
-        # the collection; failures keep the GC fallback (ref :126-131)
-        area_u = np.array(
-            [bool(decider.is_area("relation", tg, [])) for tg in parsed],
-            dtype=bool,
-        )
-        mp_rows = np.nonzero(area_u[inv[ps]])[0]
-        if len(mp_rows):
-            for r, b in _mp_assembly_wkb(rc, mp_rows, decider).items():
-                wkb[r] = b
-    else:
-        wkb = np.full(len(sel), None, dtype=object)
-
-    tokens = _doc_tokens(pdf)
-    ids = pdf["id"].to_numpy(np.int64)
-    doc_ids = pdf["doc_id"].to_numpy(object)
-    return pd.DataFrame(
-        {
-            "ts": st,
-            "entity_type": "relation",
-            "id": ids[sdoc],
-            "version": fa["version"][ps].astype(np.int32),
-            "changeset": fa["changeset"][ps],
-            "uid": fa["uid"][ps].astype(np.int32),
-            "tags": parsed[inv[ps]],
-            "geom_wkb": wkb,
-            "geom_clipped_wkb": wkb,
-            "cell": tokens[sdoc],
-            "doc_id": doc_ids[sdoc],
-        },
-        columns=_SNAP_COLS,
-    )
-
-
-def _rel_window_filter(ra: dict, win_slot, win_from, win_to, q_slot, q_ts):
-    """Keep the (slot, ts) queries covered by some [from, to]-inclusive
-    window of that slot. Windows of one slot are sorted by `from` and
-    non-overlapping except shared endpoints (membership windows derive
-    from consecutive parent versions), so last-from-≤-ts decides."""
-    if len(win_slot) == 0 or len(q_slot) == 0:
-        return np.zeros(len(q_slot), dtype=bool)
-    wkey = win_slot * (1 << 34) + win_from
-    order = np.argsort(wkey, kind="stable")
-    wkey_s, wto_s, wslot_s = wkey[order], win_to[order], win_slot[order]
-    qk = q_slot * (1 << 34) + q_ts
-    pos = np.searchsorted(wkey_s, qk, side="right") - 1
-    ok = pos >= 0
-    posc = np.where(ok, pos, 0)
-    ok &= (wslot_s[posc] == q_slot) & (q_ts <= wto_s[posc])
-    return ok
-
-
-def _rel_state_keys(
-    ra: dict, fa: dict, m: np.ndarray, own_keep: np.ndarray
-):
-    """Contribution state keys (doc*2^34 + ts) for relation docs: own
-    filter-aware mod timestamps ∪ member timestamps inside relation
-    membership windows, with way members recursing to their node
-    children (mod_timestamps dispatch, OSHEntities.java:268-478).
-
-    m = per-own-version visible∧matching mask (membership windows come
-    from MATCHING versions only, OSHEntities.java:335-367); own_keep =
-    the filter-aware keep mask (match ∨ prev-matched transition)."""
-    nv = len(fa["ts"])
-    combined, doc_idx, ts_arr = fa["combined"], fa["doc_idx"], fa["ts"]
-
-    # next own-version ts per version (INF at doc end)
-    next_ts = np.empty(nv, dtype=np.int64)
-    if nv:
-        next_ts[:-1] = ts_arr[1:]
-        next_ts[-1] = _INF
-        last = np.zeros(nv, dtype=bool)
-        lens, starts = fa["lens"], fa["starts"]
-        last[starts[lens > 0] + lens[lens > 0] - 1] = True
-        next_ts[last] = _INF
-
-    # relation windows: matching versions × their refs → (member slot,
-    # from, to)
-    mver = np.nonzero(m & (ra["refcnt"] > 0))[0]
-    win_slot = np.empty(0, dtype=np.int64)
-    win_from = np.empty(0, dtype=np.int64)
-    win_to = np.empty(0, dtype=np.int64)
-    if len(mver):
-        rn = ra["refcnt"][mver]
-        total = int(rn.sum())
-        vrow = np.repeat(np.arange(len(mver), dtype=np.int64), rn)
-        local = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(rn) - rn, rn
-        )
-        goff = np.repeat(ra["ref_starts"][mver], rn) + local
-        rref = ra["ref_flat"][goff]
-        rtype = ra["reftype"][goff]
-        slot, found = _rel_member_slots(ra, doc_idx[mver][vrow], rtype, rref)
-        win_slot = slot[found]
-        win_from = ts_arr[mver][vrow][found]
-        win_to = next_ts[mver][vrow][found]
-
-    slot_of_ver = ra["slot_of_ver"]
-    ver_type = (
-        ra["mem_type"][slot_of_ver] if len(slot_of_ver) else slot_of_ver
-    )
-
-    # candidate member streams: (owner slot, ts)
-    cand_slot = [np.empty(0, dtype=np.int64)]
-    cand_ts = [np.empty(0, dtype=np.int64)]
-
-    # node members: ALL version timestamps (node recursion variant adds
-    # invisible ones too, OSHEntities getModificationTimestamps(OSHNode))
-    node_vers = np.nonzero(ver_type == 0)[0]
-    cand_slot.append(slot_of_ver[node_vers])
-    cand_ts.append(ra["m_ts"][node_vers])
-
-    # way members: own transition timestamps (null-filter own_mod rules)
-    wv_all = np.nonzero(ver_type == 1)[0]
-    if len(wv_all):
-        first_in_slot = np.zeros(len(slot_of_ver), dtype=bool)
-        ml, ms = ra["m_lens"], ra["m_starts"]
-        first_in_slot[ms[ml > 0]] = True
-        pv = np.empty(len(slot_of_ver), dtype=bool)
-        pv[0] = False
-        pv[1:] = ra["m_vis"][:-1]
-        pv[first_in_slot] = False
-        keep_w = ra["m_vis"] | pv
-        wkeep = wv_all[keep_w[wv_all]]
-        cand_slot.append(slot_of_ver[wkeep])
-        cand_ts.append(ra["m_ts"][wkeep])
-
-        # way→node child selection: per (way, child) pair, node version
-        # timestamps inside the WAY's visible-version windows
-        m_next = np.empty(len(ra["m_ts"]), dtype=np.int64)
-        if len(ra["m_ts"]):
-            m_next[:-1] = ra["m_ts"][1:]
-            m_next[-1] = _INF
-            lastm = np.zeros(len(ra["m_ts"]), dtype=bool)
-            lastm[ms[ml > 0] + ml[ml > 0] - 1] = True
-            m_next[lastm] = _INF
-        wvis = np.nonzero(
-            (ver_type == 1) & ra["m_vis"] & (ra["m_refcnt"] > 0)
-        )[0]
-        if len(wvis):
-            wrn = ra["m_refcnt"][wvis]
-            wtotal = int(wrn.sum())
-            wrow = np.repeat(np.arange(len(wvis), dtype=np.int64), wrn)
-            wloc = np.arange(wtotal, dtype=np.int64) - np.repeat(
-                np.cumsum(wrn) - wrn, wrn
-            )
-            cref = ra["m_ref"][np.repeat(ra["m_ref_starts"][wvis], wrn) + wloc]
-            cdoc = ra["mem_doc"][slot_of_ver[wvis]][wrow]
-            cslot, cfound = _rel_member_slots(
-                ra, cdoc, np.zeros(len(cref), dtype=np.int64), cref
-            )
-            owner = slot_of_ver[wvis][wrow][cfound]
-            cslot = cslot[cfound]
-            cfrom = ra["m_ts"][wvis][wrow][cfound]
-            cto = m_next[wvis][wrow][cfound]
-            if len(cslot):
-                # windows of DIFFERENT owner ways over the same child may
-                # overlap, so the disjoint-window search runs per
-                # (owner, child) pair
-                n_slots = max(len(ra["mem_id"]), 1)
-                praw = owner * n_slots + cslot
-                pairs, pair_of = np.unique(praw, return_inverse=True)
-                q_child = (pairs % n_slots).astype(np.int64)
-                qcnt = ra["m_lens"][q_child]
-                qrow = np.repeat(np.arange(len(pairs), dtype=np.int64), qcnt)
-                qloc = np.arange(int(qcnt.sum()), dtype=np.int64) - np.repeat(
-                    np.cumsum(qcnt) - qcnt, qcnt
-                )
-                qver = np.repeat(ra["m_starts"][q_child], qcnt) + qloc
-                ok = _rel_window_filter(
-                    ra, pair_of, cfrom, cto, qrow, ra["m_ts"][qver]
-                )
-                sel = np.nonzero(ok)[0]
-                cand_slot.append((pairs[qrow[sel]] // n_slots).astype(np.int64))
-                cand_ts.append(ra["m_ts"][qver[sel]])
-
-    q_slot = np.concatenate(cand_slot)
-    q_ts = np.concatenate(cand_ts)
-    keep = _rel_window_filter(ra, win_slot, win_from, win_to, q_slot, q_ts)
-    child_key = (
-        ra["mem_doc"][q_slot[keep]] * (1 << 34) + q_ts[keep]
-        if keep.any()
-        else np.empty(0, dtype=np.int64)
-    )
-
-    own_idx = np.nonzero(own_keep)[0]
-    return np.unique(
-        np.concatenate(
-            [doc_idx[own_idx] * (1 << 34) + ts_arr[own_idx], child_key]
-        )
-    )
+    """Vectorized snapshot kernel for fully-inside RELATION docs."""
+    o, mt = own_table(pdf), member_table(pdf, "relation")
+    return snapshot_frame(pdf, "relation", o, requested, with_geometry,
+                          rel_geometry(o, mt, decider), has_refs(mt))
 
 
 def rels_contrib_vec(
     pdf: pd.DataFrame, t_first: int, t_last: int, with_geometry: bool, decider
 ) -> pd.DataFrame:
-    """Vectorized contribution kernel for fully-inside RELATION docs —
-    the way kernel's state machine (kernels.contribution._ways_contrib_vec)
-    with two-level member recursion for states, geometry, and changesets."""
-    fa = _flat_node_arrays(pdf)
-    nv = len(fa["ts"])
-    if nv == 0:
-        return _empty_frame(_CONTRIB_COLS)
-    ra = _flat_rel_arrays(pdf)
-    vis, match, ts_arr = fa["visible"], fa["match"], fa["ts"]
-    doc_idx, combined = fa["doc_idx"], fa["combined"]
-    starts, lens = fa["starts"], fa["lens"]
-
-    m = vis & match
-    first_in_doc = np.zeros(nv, dtype=bool)
-    first_in_doc[starts[lens > 0]] = True
-    pm = np.empty(nv, dtype=bool)
-    pm[0] = False
-    pm[1:] = m[:-1]
-    pm[first_in_doc] = False
-    own_keep = m | pm
-
-    state_key = _rel_state_keys(ra, fa, m, own_keep)
-    if len(state_key) == 0:
-        return _empty_frame(_CONTRIB_COLS)
-
-    # changeset map: parent put (last own version wins) > member
-    # putIfAbsent (first member version in slot-major order wins)
-    mk = (
-        ra["mem_doc"][ra["slot_of_ver"]] * (1 << 34) + ra["m_ts"]
-        if len(ra["m_ts"])
-        else np.empty(0, dtype=np.int64)
-    )
-    allk = np.concatenate([combined, mk])
-    allc = np.concatenate(
-        [np.zeros(nv, dtype=np.int64), np.ones(len(mk), dtype=np.int64)]
-    )
-    allr = np.concatenate(
-        [-np.arange(nv, dtype=np.int64), np.arange(len(mk), dtype=np.int64)]
-    )
-    allcs = np.concatenate([fa["changeset"], ra["m_cs"]])
-    corder = np.lexsort((allr, allc, allk))
-    ks, css = allk[corder], allcs[corder]
-    uk, ui = np.unique(ks, return_index=True)
-    state_cs = css[ui][np.searchsorted(uk, state_key)]
-
-    sdoc = (state_key >> 34).astype(np.int64)
-    t_arr_s = (state_key & _TS_MASK).astype(np.int64)
-
-    # changeset squash: keep LAST of each consecutive same-cs run per doc
-    ns0 = len(state_key)
-    dropq = np.zeros(ns0, dtype=bool)
-    if ns0 > 1:
-        dropq[:-1] = (sdoc[:-1] == sdoc[1:]) & (state_cs[:-1] == state_cs[1:])
-    keepq = ~dropq
-    state_key, sdoc, t_arr_s, state_cs = (
-        state_key[keepq], sdoc[keepq], t_arr_s[keepq], state_cs[keepq]
-    )
-    ns = len(state_key)
-
-    a = np.searchsorted(combined, state_key, side="right") - 1
-    pres = vis[a] & match[a]
-    s_first = np.ones(ns, dtype=bool)
-    s_first[1:] = sdoc[1:] != sdoc[:-1]
-    sidx = np.arange(ns, dtype=np.int64)
-    inb = (t_arr_s >= t_first) & (t_arr_s < t_last)
-    group_starts = np.nonzero(s_first)[0]
-    fi_group = np.minimum.reduceat(np.where(inb, sidx, ns + 5), group_starts)
-    b_group = np.maximum(fi_group - 1, group_starts)
-    group_of = np.cumsum(s_first) - 1
-    bmap = b_group[group_of]
-    valid_prev = ~s_first & (sidx - 1 >= bmap)
-    ppres = np.empty(ns, dtype=bool)
-    ppres[0] = False
-    ppres[1:] = pres[:-1]
-    ppres &= valid_prev
-
-    creation = pres & ~ppres
-    deletion = ~pres & ~s_first & ppres
-    both = pres & ppres
-    emitted_any = (creation | deletion | both) & (sidx >= bmap)
-    e_shift = np.empty(ns, dtype=np.int64)
-    e_shift[0] = -1
-    e_shift[1:] = np.where(emitted_any[:-1], sidx[:-1], -1)
-    e_shift[s_first] = -1
-    big = ns + 2
-    enc = sdoc * big + (e_shift + 1)
-    acc = np.maximum.accumulate(enc)
-    has_prev_emit = (acc // big == sdoc) & (acc % big > 0)
-    prev_ptr = np.where(has_prev_emit, acc % big - 1, 0)
-    pa = a[prev_ptr]
-
-    uniq, inv = np.unique(fa["tags"].astype(str), return_inverse=True)
-    canon_u = np.array(
-        [json.dumps(json.loads(x), sort_keys=True) for x in uniq], dtype=object
-    )
-    parsed_u = np.array([json.loads(x) for x in uniq], dtype=object)
-    canon = canon_u[inv]
-
-    # geometry per present state (collection structure compare)
-    gi = np.nonzero(pres)[0]
-    g_of = np.full(ns, -1, dtype=np.int64)
-    g_of[gi] = np.arange(len(gi))
-    rc = _resolve_rel_components(ra, sdoc[gi], t_arr_s[gi], a[gi], decider)
-
-    # multipolygon-typed states get ASSEMBLED geometry (GC fallback on
-    # failure); computed before the compare because geometry change for
-    # pairs involving an assembled side must compare the final built
-    # geometry (ref :649-665 equalsExact on built geometries)
-    area_u2 = np.array(
-        [bool(decider.is_area("relation", tg, [])) for tg in parsed_u],
-        dtype=bool,
-    )
-    area_state = area_u2[inv[a[gi]]] if len(gi) else np.zeros(0, dtype=bool)
-    mp_wkb = (
-        _mp_assembly_wkb(rc, np.nonzero(area_state)[0], decider)
-        if area_state.any()
-        else {}
-    )
-
-    cmp_idx = np.nonzero(both)[0]
-    ga, gb = g_of[cmp_idx], g_of[prev_ptr[cmp_idx]]
-    geom_neq = rc["ncomp"][ga] != rc["ncomp"][gb]
-    pairs = np.nonzero(~geom_neq & (rc["ncomp"][ga] > 0))[0]
-    if len(pairs):
-        plen = rc["ncomp"][ga[pairs]]
-        pstart = np.cumsum(plen) - plen
-        pr = np.repeat(np.arange(len(pairs), dtype=np.int64), plen)
-        ploc = np.arange(int(plen.sum()), dtype=np.int64) - pstart[pr]
-        ia = rc["comp_starts"][ga[pairs]][pr] + ploc
-        ib = rc["comp_starts"][gb[pairs]][pr] + ploc
-        eq = (
-            (rc["kind"][ia] == rc["kind"][ib])
-            & (rc["nc"][ia] == rc["nc"][ib])
-        ).astype(np.int64)
-        struct_ok = np.add.reduceat(eq, pstart) == plen
-        geom_neq[pairs[~struct_ok]] = True
-        # coordinates of structurally-equal pairs
-        p2 = pairs[struct_ok]
-        if len(p2):
-            clen = rc["row_nc"][ga[p2]]
-            nzc = clen > 0
-            p3 = p2[nzc]
-            if len(p3):
-                clen3 = rc["row_nc"][ga[p3]]
-                cst = np.cumsum(clen3) - clen3
-                cr = np.repeat(np.arange(len(p3), dtype=np.int64), clen3)
-                cloc = np.arange(int(clen3.sum()), dtype=np.int64) - cst[cr]
-                ja = rc["row_coord_starts"][ga[p3]][cr] + cloc
-                jb = rc["row_coord_starts"][gb[p3]][cr] + cloc
-                ceq = (
-                    (rc["lon7"][ja] == rc["lon7"][jb])
-                    & (rc["lat7"][ja] == rc["lat7"][jb])
-                ).astype(np.int64)
-                coord_ok = np.add.reduceat(ceq, cst) == clen3
-                geom_neq[p3[~coord_ok]] = True
-
-    if mp_wkb:
-        # pairs with an assembled side: byte-compare the FINAL geometries
-        # (assembled where applicable, GC otherwise) — identical
-        # components always assemble identically, but differing
-        # components can still assemble to equal rings
-        involved = [
-            i for i in range(len(cmp_idx))
-            if int(ga[i]) in mp_wkb or int(gb[i]) in mp_wkb
-        ]
-        if involved:
-            need_gc = sorted(
-                {int(x) for i in involved for x in (ga[i], gb[i])}
-                - set(mp_wkb)
-            )
-            gcw = {}
-            if need_gc:
-                arr = _rel_wkb_vec(rc, np.asarray(need_gc, dtype=np.int64))
-                gcw = dict(zip(need_gc, arr))
-            for i in involved:
-                wa = mp_wkb.get(int(ga[i]), gcw.get(int(ga[i])))
-                wb = mp_wkb.get(int(gb[i]), gcw.get(int(gb[i])))
-                geom_neq[i] = wa != wb
-
-    tag_chg = np.zeros(ns, dtype=bool)
-    geom_chg = np.zeros(ns, dtype=bool)
-    tag_chg[cmp_idx] = canon[a[cmp_idx]] != canon[pa[cmp_idx]]
-    geom_chg[cmp_idx] = geom_neq
-
-    emit = emitted_any & inb
-    sel = np.nonzero(emit)[0]
-    if len(sel) == 0:
-        return _empty_frame(_CONTRIB_COLS)
-
-    from .contribution import _TYPE_LUT
-
-    key = (
-        creation[sel].astype(np.int8)
-        + 2 * deletion[sel].astype(np.int8)
-        + 4 * geom_chg[sel].astype(np.int8)
-        + 8 * tag_chg[sel].astype(np.int8)
-    )
-    types = [_TYPE_LUT[int(k)] for k in key]
-
-    # contributor attribution: own uid if the relation version changed at
-    # t, else the first member (slot-major, version order) with a version
-    # at exactly t (OSMContribution.java:211-257)
-    uid_out = fa["uid"][a[sel]].astype(np.int64)
-    not_own = ts_arr[a[sel]] != t_arr_s[sel]
-    if not_own.any() and len(mk):
-        morder = np.lexsort((np.arange(len(mk)), mk))
-        mk_s = mk[morder]
-        q = state_key[sel[not_own]]
-        mpos2 = np.minimum(np.searchsorted(mk_s, q), len(mk_s) - 1)
-        hit = mk_s[mpos2] == q
-        muid = ra["m_uid"][morder[mpos2]]
-        vals = uid_out[not_own]
-        vals[hit] = muid[hit]
-        uid_out[not_own] = vals
-
-    prev_present = pres[prev_ptr] & has_prev_emit
-    wkb_g = np.full(max(len(gi), 1), None, dtype=object)
-    if with_geometry and len(gi):
-        # WKB only for states an emitted row references (current or prev)
-        used = np.unique(
-            np.concatenate(
-                [
-                    g_of[sel][pres[sel]],
-                    g_of[prev_ptr[sel]][prev_present[sel]],
-                ]
-            )
-        )
-        used = used[used >= 0]
-        if len(used):
-            wkb_g[used] = _rel_wkb_vec(rc, used)
-            for g in used:
-                if int(g) in mp_wkb:
-                    wkb_g[g] = mp_wkb[int(g)]
-    geom_after = np.where(pres[sel], wkb_g[np.maximum(g_of[sel], 0)], None)
-    geom_before = np.where(
-        prev_present[sel], wkb_g[np.maximum(g_of[prev_ptr[sel]], 0)], None
-    )
-
-    tokens = _doc_tokens(pdf)
-    ids = pdf["id"].to_numpy(np.int64)
-    doc_ids = pdf["doc_id"].to_numpy(object)
-    dsel = sdoc[sel]
-    asel, pasel = a[sel], pa[sel]
-    hp = has_prev_emit[sel]
-
-    return pd.DataFrame(
-        {
-            "ts": t_arr_s[sel],
-            "entity_type": "relation",
-            "id": ids[dsel],
-            "contrib_types": types,
-            "changeset": state_cs[sel],
-            "contributor_uid": uid_out.astype(np.int32),
-            "version_before": np.where(
-                hp, fa["version"][pasel].astype(object), None
-            ),
-            "version_after": fa["version"][asel].astype(np.int32),
-            "tags_before": np.where(hp, parsed_u[inv[pasel]], None),
-            "tags_after": parsed_u[inv[asel]],
-            "geom_before_wkb": geom_before,
-            "geom_after_wkb": geom_after,
-            "geom_before_clipped_wkb": geom_before,
-            "geom_after_clipped_wkb": geom_after,
-            "cell": tokens[dsel],
-            "doc_id": doc_ids[dsel],
-        },
-        columns=_CONTRIB_COLS,
-    )
+    """Vectorized contribution kernel for fully-inside RELATION docs."""
+    o, mt = own_table(pdf), member_table(pdf, "relation")
+    return contribution_frame(pdf, "relation", o, mt, t_first, t_last,
+                              with_geometry, rel_geometry(o, mt, decider))

@@ -1,4 +1,4 @@
-"""Snapshot kernel: entity states as-of requested timestamps.
+"""Snapshot view and the docs preparation both views share.
 
 Spark plan shape (designed for 100 TB):
 
@@ -6,8 +6,10 @@ Spark plan shape (designed for 100 TB):
       → Catalyst doc pre-filter (tag existence, type, id — pushed down)
       → JVM typed decode (higher-order fns; no shuffle)
       → JVM doc-bbox summary + bbox pre-filter (no shuffle)
-      → mapInPandas snapshot kernel (narrow! one doc is self-contained,
-        so reconstruction never shuffles; Arrow-batched)
+      → mapInPandas kernel (narrow! one doc is self-contained, so
+        reconstruction never shuffles; Arrow-batched): node, way and
+        relation docs through the vectorized core (kernels.core), the
+        rest through the general per-doc walk below
       → downstream groupBy/agg (the only shuffle, partial+final via AQE)
 
 Kernel semantics ≙ CellIterator.iterateByTimestamps
@@ -19,8 +21,6 @@ computed once per changed state, O5), visibility/empty-member skips,
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,6 +31,19 @@ from ..geo import geom as G
 from ..model import docs as docs_mod
 from ..model import schemas
 from .aoi import AOI
+from .core import (  # noqa: F401 (_route_way_fast: routing tests import it here)
+    _FP,
+    _LON_SENTINEL,
+    _route_way_fast,
+    dispatch,
+    has_refs,
+    member_table,
+    own_table,
+    point_geometry,
+    point_presence,
+    snapshot_frame,
+    way_geometry,
+)
 from .filters import compile_doc_prefilter, compile_python
 from .geometry_builder import (
     DEFAULT_INTERPRETER,
@@ -45,8 +58,7 @@ from .temporal import (
     query_timestamps,
     sort_versions,
 )
-
-_FP = 10_000_000  # degrees → fixed-point
+from .relation_vec import rel_fast_mode, rels_snapshot_vec
 
 
 def with_doc_bbox(typed: DataFrame) -> DataFrame:
@@ -82,10 +94,6 @@ def with_doc_bbox(typed: DataFrame) -> DataFrame:
     )
 
 
-# null-coordinate sentinel for the flat member arrays (v.lon is null on
-# deleted versions; 0 is a valid coordinate, so nulls map to -2^62)
-_LON_SENTINEL = -(1 << 62)
-
 # ISO span timestamps carry an explicit zone ('Z'), so the plain string →
 # timestamp CAST parses them TZ-independently — and takes Spark's fast
 # ISO-8601 parse path instead of the DateTimeFormatter one (measured ~2×
@@ -114,7 +122,7 @@ def prepared_docs(
     fast_rels: str | None = None,
     store_mode: bool = False,
 ) -> DataFrame:
-    """Summarized + JVM-pre-filtered docs (shared by both kernels).
+    """Summarized + JVM-pre-filtered docs (shared by both views).
 
     The typed decode runs JVM-side for pre-filtering and bbox summaries,
     but the kernel input carries only Arrow-safe columns (raw spans +
@@ -122,33 +130,35 @@ def prepared_docs(
     segfaults pyarrow's arrow_to_pandas, so version/member JSON is parsed
     in the kernel instead.
 
-    With ``fast_arrays=True``, member-less node docs additionally carry
-    their version fields as JVM-parsed PRIMITIVE parallel arrays (vts,
-    vlon, ... — Arrow-safe, no nested maps) and NULL spans, so the kernel
-    can run them through a fully vectorized numpy path with zero
-    per-version Python. Tag filters are evaluated JVM-side into a
-    ``vmatch`` boolean array (the analog of fusing the reference's exact
-    filters into the scan). Docs that need the general path (relations,
-    python filters) keep their spans and get NULL arrays.
-
-    With ``fast_ways=True`` additionally, WAY docs whose members are all
-    nodes AND that need no clipping (doc bbox fully inside the AOI bbox;
-    callers must not set this when the AOI has a polygon) get flat member
-    arrays too: per-version ref-id lists flattened to (vref, vrefcnt) and
-    per-member sorted version histories flattened to (mid, mvcnt, mts,
-    mvis, mlon, mlat, mcs, muid) — all single-level primitive arrays, so
-    one np.concatenate per column rebuilds the batch-global flat table.
+    With ``fast_arrays=True``, docs the vectorized core (kernels.core)
+    can take additionally carry their version fields as JVM-parsed
+    PRIMITIVE parallel arrays (vts, vlon, ... — Arrow-safe, no nested
+    maps) and, where they can never reach the general path, NULL spans.
+    Tag filters are evaluated JVM-side into a ``vmatch`` boolean array
+    (the analog of fusing the reference's exact filters into the scan).
     The column `fast_kind` ('node' | 'way' | 'relation' | null) routes
-    each doc.
+    each doc:
 
-    With ``fast_rels`` ('default' | 'never' — the area-decider mode)
-    additionally, RELATION docs that can never take the multipolygon
-    assembly path (mode 'default': no version carries
-    type∈{multipolygon,boundary}; mode 'never': all) and whose members
-    are nodes/ways only get TWO-LEVEL flat member tables: own refs keep
-    their type (rvref/rvreftype), member histories carry way tags + ref
-    id lists (rm* columns), so the kernel resolves
-    relation→way-member→node-member as-of joins with pure searchsorted.
+    - 'node': member-less node docs, at any AOI (the kernel's point test
+      is exact).
+    - 'way' (with ``fast_ways``): way docs whose members are all nodes
+      and whose doc bbox is inside the AOI bbox. They also get flat member
+      arrays: per-version ref-id lists flattened to (vref, vrefcnt) and
+      per-member sorted version histories flattened to (mid, mvcnt, mts,
+      mvis, mlon, mlat, mcs, muid) — one np.concatenate per column
+      rebuilds the batch-global member table.
+    - 'relation' (with ``fast_rels``, the area-decider mode of
+      relation_vec.rel_fast_mode): relation docs whose members are nodes
+      and ways, under the same bbox condition, with TWO-LEVEL member
+      tables: own refs keep their type and role (rvref/rvreftype/
+      rvrefrole), member histories carry way tags + ref-id lists (rm*
+      columns), so the kernel resolves relation→way-member→node-member
+      as-of joins with pure searchsorted.
+
+    Under a polygon AOI, way and relation docs crossing the polygon's
+    boundary demote to the general path in the kernel (the exact
+    bbox_vs_polygon 3-state), so they keep their spans. Python filters
+    route every doc to the general path.
     """
     pre = compile_doc_prefilter(filter_spec)
     has_py = any(s[0] == "py" for s in (filter_spec or []))
@@ -265,24 +275,11 @@ def prepared_docs(
     # second full decode of every row
     if pre is not None:
         typed = typed.filter(pre)
-    typed = with_doc_bbox(typed)
-    if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
-        typed = typed.filter(
-            (F.col("bbox_min_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_max_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_min_lat") <= int(b[3] * _FP))
-            & (F.col("bbox_max_lat") >= int(b[1] * _FP))
-        )
-    base = [
-        "doc_id", "entity_type", "id",
-        "bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat",
-    ]
+    typed = _aoi_prefilter(with_doc_bbox(typed), aoi)
     if not fast_arrays:
-        return typed.select(*base, "spans")
+        return typed.select(*_BASE, "spans")
     return _fast_projection(
-        typed, base, F.col("spans"), filter_spec, aoi, fast_ways, fast_rels,
-        has_py, store_mode,
+        typed, filter_spec, aoi, fast_ways, fast_rels, has_py, store_mode,
     )
 
 
@@ -304,6 +301,86 @@ _R_COLS = [
 ]
 
 
+_BASE = [
+    "doc_id", "entity_type", "id",
+    "bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat",
+]
+
+
+def _fast_kind():
+    return (
+        F.when(F.col("_fastn"), F.lit("node"))
+        .when(F.col("_fastw"), F.lit("way"))
+        .when(F.col("_fastr"), F.lit("relation"))
+    )
+
+
+def _bbox_pred(aoi: AOI | None, inside: bool):
+    """Doc-bbox test against the AOI bbox (fixed point): fully inside, or
+    overlapping; None for no/world AOI."""
+    if aoi is None or aoi.is_world:
+        return None
+    w, s, e, n = (int(x * _FP) for x in aoi.bbox)
+    if inside:
+        return ((F.col("bbox_min_lon") >= w) & (F.col("bbox_max_lon") <= e)
+                & (F.col("bbox_min_lat") >= s) & (F.col("bbox_max_lat") <= n))
+    return ((F.col("bbox_min_lon") <= e) & (F.col("bbox_max_lon") >= w)
+            & (F.col("bbox_min_lat") <= n) & (F.col("bbox_max_lat") >= s))
+
+
+def _aoi_prefilter(typed: DataFrame, aoi: AOI | None) -> DataFrame:
+    overlap = _bbox_pred(aoi, inside=False)
+    return typed if overlap is None else typed.filter(overlap)
+
+
+def _routing_flags(typed, node, way, rel, aoi, fast_ways, fast_rels, has_py):
+    """Add the routing columns _fastn/_fastw/_fastr/_fast from the
+    structural eligibility of each kind. Ways and relations take the
+    vectorized core only when their doc bbox is fully inside the AOI bbox
+    (no clip step); for a polygon AOI this test is only NECESSARY — the
+    kernel refines with the exact bbox_vs_polygon 3-state and demotes
+    boundary docs (they keep their spans, see _spans_keep). Python
+    filters route every doc to the general path."""
+    inside = _bbox_pred(aoi, inside=True)
+    if inside is not None:
+        way, rel = way & inside, rel & inside
+    off = F.lit(False)
+    if has_py:
+        node = off
+    if has_py or not fast_ways:
+        way = off
+    if has_py or not fast_rels:
+        rel = off
+    return (
+        typed.withColumn("_fastn", node)
+        .withColumn("_fastw", way)
+        .withColumn("_fastr", rel)
+        .withColumn("_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr"))
+    )
+
+
+def _spans_keep(aoi: AOI | None):
+    """Docs that may reach the general path keep their raw spans: all but
+    the vectorized ones, and under a polygon AOI also vectorized ways and
+    relations (they demote at its boundary); nodes never demote, their
+    polygon test is exact in the vectorized path."""
+    if aoi is not None and aoi.polygon is not None:
+        return ~F.col("_fastn")
+    return ~F.col("_fast")
+
+
+def _vmatch_sql(filter_spec) -> str | None:
+    """Per-version filter match, evaluated JVM-side (the analog of fusing
+    the reference's exact filters into the scan)."""
+    from .filters import _version_pred_sql
+
+    preds = [p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p]
+    if not preds:
+        return None
+    conj = " and ".join(f"({p})" for p in preds)
+    return f"transform(versions, v -> coalesce({conj}, false))"
+
+
 def _flat_store_docs(
     docs: DataFrame,
     filter_spec,
@@ -322,76 +399,25 @@ def _flat_store_docs(
     'relation' node-way-members / null) and `has_mp_type`; query-dependent
     conditions (AOI bbox containment, python filters, decider mode)
     compose on top here."""
-    from .filters import _version_pred_sql
-
     typed = docs
     if pre is not None:
         typed = typed.filter(pre)
-    if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
-        typed = typed.filter(
-            (F.col("bbox_min_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_max_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_min_lat") <= int(b[3] * _FP))
-            & (F.col("bbox_max_lat") >= int(b[1] * _FP))
-        )
-    base = [
-        "doc_id", "entity_type", "id",
-        "bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat",
-    ]
+    typed = _aoi_prefilter(typed, aoi)
     if not fast_arrays:
-        return typed.select(*base, "spans")
-    inside = None
-    if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
-        inside = (
-            (F.col("bbox_min_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-            & (F.col("bbox_max_lat") <= int(b[3] * _FP))
-        )
+        return typed.select(*_BASE, "spans")
     # eqNullSafe: flat_kind is NULL for structurally-unroutable docs, and
     # a plain == would propagate that NULL into _fast and silently null
     # out the spans gate (dropping the doc from the general path)
-    fast_node = F.col("flat_kind").eqNullSafe("node")
-    fast_way = F.col("flat_kind").eqNullSafe("way")
-    if inside is not None:
-        fast_way = fast_way & inside
-    if not fast_ways:
-        fast_way = F.lit(False)
-    fast_rel = F.lit(False)
-    if fast_rels:
-        fast_rel = F.col("flat_kind").eqNullSafe("relation")
-        if inside is not None:
-            fast_rel = fast_rel & inside
-    if has_py:
-        fast_node = F.lit(False)
-        fast_way = F.lit(False)
-        fast_rel = F.lit(False)
-    may_demote = aoi is not None and aoi.polygon is not None
-    typed = (
-        typed.withColumn("_fastn", fast_node)
-        .withColumn("_fastw", fast_way)
-        .withColumn("_fastr", fast_rel)
-        .withColumn(
-            "_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr")
-        )
+    kind = F.col("flat_kind")
+    typed = _routing_flags(
+        typed, kind.eqNullSafe("node"), kind.eqNullSafe("way"),
+        kind.eqNullSafe("relation"), aoi, fast_ways, fast_rels, has_py,
     )
-    spans_keep = (~F.col("_fastn")) if may_demote else (~F.col("_fast"))
-    preds = [
-        p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p
-    ]
-    match_expr = None
-    if preds:
-        conj = " and ".join(f"({p})" for p in preds)
-        match_expr = f"transform(versions, v -> coalesce({conj}, false))"
+    match_expr = _vmatch_sql(filter_spec)
     out_cols = [
-        *base,
-        F.when(spans_keep, F.col("spans")).alias("spans"),
-        F.when(F.col("_fastn"), F.lit("node"))
-        .when(F.col("_fastw"), F.lit("way"))
-        .when(F.col("_fastr"), F.lit("relation"))
-        .alias("fast_kind"),
+        *_BASE,
+        F.when(_spans_keep(aoi), F.col("spans")).alias("spans"),
+        _fast_kind().alias("fast_kind"),
         *[F.when(F.col("_fast"), F.col(c)).alias(c) for c in _V_COLS],
         (
             F.when(F.col("_fast"), F.expr(match_expr))
@@ -409,8 +435,6 @@ def _flat_store_docs(
 
 def _fast_projection(
     typed: DataFrame,
-    base: list,
-    spans_col,
     filter_spec,
     aoi: AOI | None,
     fast_ways: bool,
@@ -426,72 +450,25 @@ def _fast_projection(
     `flat_kind` + `has_mp_type` columns, and the sorted nested `versions`
     column is kept for the SQL path — so a query over the store replays
     only _flat_store_docs' cheap gating, never this decode."""
-    from .filters import _version_pred_sql
-
-    preds = [p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p]
-    fast_node = (F.col("entity_type") == "node") & (F.size("members") == 0)
-    fast_way = (F.col("entity_type") == "way") & ~F.expr(
-        "exists(members, m -> m.entity_type <> 'node')"
-    )
-    if aoi is not None and not aoi.is_world:
-        # way fast path handles only fully-inside docs (no clip step);
-        # boundary-crossing ways keep the general per-doc path. For a
-        # polygon AOI this bbox test is only NECESSARY — the kernel
-        # refines with the exact bbox_vs_polygon 3-state and demotes
-        # boundary docs, so their spans are preserved below.
-        b = aoi.bbox
-        fast_way = fast_way & (
-            (F.col("bbox_min_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-            & (F.col("bbox_max_lat") <= int(b[3] * _FP))
-        )
-    if not fast_ways:
-        fast_way = F.lit(False)
-    fast_rel = F.lit(False)
-    if fast_rels:
-        # relation fast path: members are node/way only (multipolygon-
-        # typed versions are handled IN the vectorized kernel — per-state
-        # is_area routes them through assemble_multipolygon on resolved
-        # flat chains, with the geometry-collection fallback).
-        # coalesce: IN over a missing map key is NULL, and exists() over
-        # nulls is NULL — which would silently null out _fast and drop
-        # the doc from every path
-        fast_rel = (F.col("entity_type") == "relation") & ~F.expr(
+    # relation fast path: members are node/way only (multipolygon-typed
+    # versions are assembled IN the vectorized kernel, with the
+    # geometry-collection fallback). coalesce: IN over a missing map key
+    # is NULL, and exists() over nulls is NULL — which would silently
+    # null out _fast and drop the doc from every path
+    typed = _routing_flags(
+        typed,
+        (F.col("entity_type") == "node") & (F.size("members") == 0),
+        (F.col("entity_type") == "way")
+        & ~F.expr("exists(members, m -> m.entity_type <> 'node')"),
+        (F.col("entity_type") == "relation") & ~F.expr(
             "exists(membersR,"
             " m -> not coalesce(m.entity_type in ('node', 'way'), false))"
-        )
-        if aoi is not None and not aoi.is_world:
-            b = aoi.bbox
-            fast_rel = fast_rel & (
-                (F.col("bbox_min_lon") >= int(b[0] * _FP))
-                & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-                & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-                & (F.col("bbox_max_lat") <= int(b[3] * _FP))
-            )
-    if has_py:
-        fast_node = F.lit(False)
-        fast_way = F.lit(False)
-        fast_rel = F.lit(False)
-    may_demote = aoi is not None and aoi.polygon is not None
-    typed = (
-        typed.withColumn("_fastn", fast_node)
-        .withColumn("_fastw", fast_way)
-        .withColumn("_fastr", fast_rel)
-        .withColumn(
-            "_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr")
-        )
+        ),
+        aoi, fast_ways, fast_rels, has_py,
     )
-    # fast-way/relation docs under a polygon AOI may demote to the
-    # general path (kernel-side exact 3-state), so they keep their spans;
-    # fast nodes never demote (their polygon test is exact in the
-    # vectorized path). The store keeps every doc's spans: a later query
-    # may route ANY doc to the general path (python filters).
-    spans_keep = (
-        F.lit(True)
-        if store_mode
-        else ((~F.col("_fastn")) if may_demote else (~F.col("_fast")))
-    )
+    # the store keeps every doc's spans: a later query may route ANY doc
+    # to the general path (python filters)
+    spans_keep = F.lit(True) if store_mode else _spans_keep(aoi)
     # second barrier: sort the OWN versions (index natural-sort over the
     # bound array — struct(ts, ver, i) keys are fully orderable, then
     # gather by i; no interpreted comparator, no re-decode) and
@@ -517,7 +494,7 @@ def _fast_projection(
     ]
     # relation member versions are NOT sorted JVM-side: an array_sort
     # index-gather would re-materialize every member struct (tags maps +
-    # ref arrays) a second time; the kernel's _flat_rel_arrays sorts the
+    # ref arrays) a second time; the kernel's core.member_table sorts the
     # flat primitive arrays with one numpy lexsort instead (free when the
     # store is already version-ordered).
     typed = typed.select(
@@ -539,22 +516,16 @@ def _fast_projection(
     ts_expr = (
         "transform(versions, v -> " + _TS_PARSE.format("v") + ")"
     )
-    match_expr = None
-    if preds:
-        conj = " and ".join(f"({p})" for p in preds)
-        match_expr = f"transform(versions, v -> coalesce({conj}, false))"
+    match_expr = _vmatch_sql(filter_spec)
     mem_ts = (
         "flatten(transform(_ms, vs -> transform(vs, v -> "
         + _TS_PARSE.format("v")
         + ")))"
     )
     out_cols = [
-        *base,
-        F.when(spans_keep, spans_col).alias("spans"),
-        F.when(F.col("_fastn"), F.lit("node"))
-        .when(F.col("_fastw"), F.lit("way"))
-        .when(F.col("_fastr"), F.lit("relation"))
-        .alias("flat_kind" if store_mode else "fast_kind"),
+        *_BASE,
+        F.when(spans_keep, F.col("spans")).alias("spans"),
+        _fast_kind().alias("flat_kind" if store_mode else "fast_kind"),
         arr(ts_expr).alias("vts"),
         arr("versions.version").alias("vversion"),
         arr("versions.visible").alias("vvisible"),
@@ -750,534 +721,26 @@ def _normalize_ts(versions):
     return versions
 
 
-def _point_wkb_vec(lon_deg: np.ndarray, lat_deg: np.ndarray) -> list[bytes]:
-    """Vectorized ISO little-endian WKB Point encoding (byte-identical to
-    geo.geom.to_wkb for Points)."""
-    n = len(lon_deg)
-    buf = np.empty((n, 21), dtype=np.uint8)
-    buf[:, 0] = 1
-    buf[:, 1] = 1
-    buf[:, 2:5] = 0
-    buf[:, 5:13] = (
-        np.ascontiguousarray(lon_deg, dtype="<f8").view(np.uint8).reshape(n, 8)
-    )
-    buf[:, 13:21] = (
-        np.ascontiguousarray(lat_deg, dtype="<f8").view(np.uint8).reshape(n, 8)
-    )
-    return [row.tobytes() for row in buf]
-
-
-_SNAP_COLS = [f.name for f in schemas.SNAPSHOTS.fields]
-
-
-def _empty_frame(cols: list[str]) -> pd.DataFrame:
-    """Zero-row frame with all-object dtype columns — a plain
-    pd.DataFrame({c: []}) defaults to float64, which pyarrow refuses to
-    cast to map/binary types on the Arrow return path."""
-    return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols},
-                        columns=cols)
-
-
-def _flat_i64(col, fill: int = 0) -> np.ndarray:
-    """Concatenate a pandas column of per-doc arrays into one int64 array,
-    mapping nulls (e.g. missing coords on deleted versions) to `fill`."""
-    x = np.concatenate([np.asarray(v) for v in col])
-    if x.dtype == object or np.issubdtype(x.dtype, np.floating):
-        mask = pd.isna(x)
-        if mask.any():
-            x = np.where(mask, fill, x)
-    return x.astype(np.int64)
-
-
-def _flat_bool(col) -> np.ndarray:
-    x = np.concatenate([np.asarray(v) for v in col])
-    if x.dtype == object or np.issubdtype(x.dtype, np.floating):
-        mask = pd.isna(x)
-        if mask.any():
-            x = np.where(mask, False, x)
-    return x.astype(bool)
-
-
-def _flat_node_arrays(pdf: pd.DataFrame) -> dict:
-    """Flat (all docs of the batch concatenated) version arrays + doc
-    segmentation, for the vectorized node kernels. `combined` is globally
-    monotonic: doc_index * 2^34 + ts (ts < 2^31 « 2^34)."""
-    n_docs = len(pdf)
-    lens = np.fromiter((len(v) for v in pdf["vts"]), dtype=np.int64, count=n_docs)
-    starts = np.cumsum(lens) - lens
-    a = {
-        "n_docs": n_docs,
-        "lens": lens,
-        "starts": starts,
-        "ts": _flat_i64(pdf["vts"]),
-        "version": _flat_i64(pdf["vversion"]),
-        "visible": _flat_bool(pdf["vvisible"]),
-        "changeset": _flat_i64(pdf["vchangeset"]),
-        "uid": _flat_i64(pdf["vuid"]),
-        "lon": _flat_i64(pdf["vlon"]),
-        "lat": _flat_i64(pdf["vlat"]),
-        "tags": np.concatenate(
-            [np.asarray(v, dtype=object) for v in pdf["vtags"]]
-        ),
-    }
-    null_tags = pd.isna(a["tags"])
-    if null_tags.any():
-        a["tags"] = np.where(null_tags, "{}", a["tags"])
-    first = pdf["vmatch"].iloc[0]
-    if first is not None and not (isinstance(first, float) and pd.isna(first)):
-        a["match"] = _flat_bool(pdf["vmatch"])
-    else:
-        a["match"] = np.ones(len(a["ts"]), dtype=bool)
-    a["doc_idx"] = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-    a["combined"] = a["doc_idx"] * (1 << 34) + a["ts"]
-    return a
-
-
-def _doc_rel_vec(pdf: pd.DataFrame, aoi: AOI) -> np.ndarray:
-    """Vector of per-doc AOI 3-states (0 disjoint / 1 inside / 2 boundary)."""
-    n_docs = len(pdf)
-    if aoi.is_world:
-        return np.ones(n_docs, dtype=np.int8)
-    bmin_lon = pdf["bbox_min_lon"].to_numpy(dtype=np.float64) / _FP
-    bmin_lat = pdf["bbox_min_lat"].to_numpy(dtype=np.float64) / _FP
-    bmax_lon = pdf["bbox_max_lon"].to_numpy(dtype=np.float64) / _FP
-    bmax_lat = pdf["bbox_max_lat"].to_numpy(dtype=np.float64) / _FP
-    w, s, e, n = aoi.bbox
-    inside = (bmin_lon >= w) & (bmax_lon <= e) & (bmin_lat >= s) & (bmax_lat <= n)
-    overlap = (bmin_lon <= e) & (bmax_lon >= w) & (bmin_lat <= n) & (bmax_lat >= s)
-    doc_rel = np.where(inside, 1, np.where(overlap, 2, 0)).astype(np.int8)
-    if aoi.polygon is not None:
-        from .aoi import bbox_vs_polygon
-
-        for i in np.nonzero(doc_rel != 0)[0]:
-            prel = bbox_vs_polygon(
-                (bmin_lon[i], bmin_lat[i], bmax_lon[i], bmax_lat[i]), aoi.polygon
-            )
-            if prel == 0:
-                doc_rel[i] = 0
-            elif prel == 2 or doc_rel[i] == 2:
-                doc_rel[i] = 2
-    return doc_rel
-
-
-def _points_in_aoi(lon_deg: np.ndarray, lat_deg: np.ndarray, aoi: AOI) -> np.ndarray:
-    if aoi.polygon is not None:
-        from ..geo.clip import points_in_polygon
-
-        return points_in_polygon(lon_deg, lat_deg, aoi.polygon)
-    w, s, e, n = aoi.bbox
-    return (lon_deg >= w) & (lon_deg <= e) & (lat_deg >= s) & (lat_deg <= n)
-
-
 def _nodes_snapshot_vec(
     pdf: pd.DataFrame, requested: list[int], aoi: AOI, with_geometry: bool
 ) -> pd.DataFrame:
-    """Fully vectorized snapshot kernel for member-less node docs.
-
-    As-of alignment across ALL docs of the batch in one searchsorted per
-    requested timestamp: versions are sorted (ts, version) within each doc,
-    so keying by doc_index * 2^34 + ts makes the flat array globally
-    monotonic (ts < 2^31 « 2^34). Zero per-version Python
-    (CellIterator.java:181-347 semantics; the queryTs/O5 reuse rule is
-    subsumed — point geometry is computed straight from the state arrays).
-    """
-    import json
-
-    fa = _flat_node_arrays(pdf)
-    n_docs, starts = fa["n_docs"], fa["starts"]
-    flat_ts, flat_ver = fa["ts"], fa["version"]
-    flat_vis, flat_cs, flat_uid = fa["visible"], fa["changeset"], fa["uid"]
-    flat_lon, flat_lat, flat_tags = fa["lon"], fa["lat"], fa["tags"]
-    flat_match, combined = fa["match"], fa["combined"]
-
-    # doc-level AOI 3-state (rel==0 rows were pruned JVM-side for bbox AOIs;
-    # polygon AOIs still need the exact doc-level test here)
-    doc_rel = _doc_rel_vec(pdf, aoi)
-
-    tokens = _doc_tokens(pdf)
-    ids = pdf["id"].to_numpy(np.int64)
-    doc_ids = pdf["doc_id"].to_numpy(object)
-
-    docs_arange = np.arange(n_docs, dtype=np.int64)
-    frames = []
-    for t in requested:
-        pos = np.searchsorted(combined, docs_arange * (1 << 34) + t, side="right") - 1
-        ok = (pos >= starts) & (doc_rel > 0)
-        p = np.where(ok, pos, 0)
-        ok &= flat_vis[p] & flat_match[p]
-        # boundary docs: exact point-in-AOI test (the "clip" of a point)
-        bnd = ok & (doc_rel == 2)
-        if bnd.any():
-            sel = np.nonzero(bnd)[0]
-            pip = _points_in_aoi(
-                flat_lon[pos[sel]] * 1e-7, flat_lat[pos[sel]] * 1e-7, aoi
-            )
-            keep = np.ones(n_docs, dtype=bool)
-            keep[sel] = pip
-            ok &= keep
-        sel = np.nonzero(ok)[0]
-        if len(sel) == 0:
-            continue
-        ps = pos[sel]
-        if with_geometry:
-            wkb = _point_wkb_vec(flat_lon[ps] * 1e-7, flat_lat[ps] * 1e-7)
-        else:
-            wkb = None
-        # parse each DISTINCT tag-json once (real tag payloads repeat a lot)
-        uniq, inv = np.unique(flat_tags[ps].astype(str), return_inverse=True)
-        parsed = np.array([json.loads(x) for x in uniq], dtype=object)
-        frames.append(
-            pd.DataFrame(
-                {
-                    "ts": np.full(len(sel), t, dtype=np.int64),
-                    "entity_type": "node",
-                    "id": ids[sel],
-                    "version": flat_ver[ps].astype(np.int32),
-                    "changeset": flat_cs[ps],
-                    "uid": flat_uid[ps].astype(np.int32),
-                    "tags": parsed[inv],
-                    "geom_wkb": wkb,
-                    "geom_clipped_wkb": wkb,
-                    "cell": tokens[sel],
-                    "doc_id": doc_ids[sel],
-                },
-                columns=_SNAP_COLS,
-            )
-        )
-    if not frames:
-        return _empty_frame(_SNAP_COLS)
-    return pd.concat(frames, ignore_index=True)
-
-
-# ---------------------------------------------------------------------------
-# vectorized WAY path: numpy as-of joins over the flat member tables
-# ---------------------------------------------------------------------------
-
-def _flat_way_arrays(pdf: pd.DataFrame) -> dict:
-    """Batch-global flat ref + member tables for way fast docs.
-
-    Member slots are numbered in (doc, span-order) order; each slot's
-    sorted version history is a segment of the flat m_* arrays, keyed by
-    slot * 2^34 + ts for one-searchsorted as-of resolution (same trick as
-    the node path's combined key). Ref ids resolve to slots through a
-    dense-rank composite key (doc * n_unique_ids + rank), avoiding any
-    assumption about node-id magnitude."""
-    n_docs = len(pdf)
-    refcnt = _flat_i64(pdf["vrefcnt"])
-    ref_flat = _flat_i64(pdf["vref"])
-    ref_starts = np.cumsum(refcnt) - refcnt
-
-    nm = np.fromiter((len(v) for v in pdf["mid"]), dtype=np.int64, count=n_docs)
-    mem_doc = np.repeat(np.arange(n_docs, dtype=np.int64), nm)
-    mem_id = _flat_i64(pdf["mid"])
-    m_lens = _flat_i64(pdf["mvcnt"])
-    m_starts = np.cumsum(m_lens) - m_lens
-    slot_of_ver = np.repeat(np.arange(len(mem_id), dtype=np.int64), m_lens)
-    m_ts = _flat_i64(pdf["mts"])
-
-    all_ids = np.unique(np.concatenate([mem_id, ref_flat]))
-    k_ids = max(len(all_ids), 1)
-    mem_key = mem_doc * k_ids + np.searchsorted(all_ids, mem_id)
-    order = np.argsort(mem_key)
-    return {
-        "refcnt": refcnt,
-        "ref_flat": ref_flat,
-        "ref_starts": ref_starts,
-        "m_starts": m_starts,
-        "m_combined": slot_of_ver * (1 << 34) + m_ts,
-        "m_vis": _flat_bool(pdf["mvis"]),
-        "m_lon": _flat_i64(pdf["mlon"], fill=_LON_SENTINEL),
-        "m_lat": _flat_i64(pdf["mlat"], fill=_LON_SENTINEL),
-        "m_cs": _flat_i64(pdf["mcs"]),
-        "m_uid": _flat_i64(pdf["muid"]),
-        "mem_doc": mem_doc,
-        "all_ids": all_ids,
-        "k_ids": k_ids,
-        "sorted_mem_keys": mem_key[order],
-        "mem_order": order,
-    }
-
-
-def _member_slots(wa: dict, doc: np.ndarray, ref_id: np.ndarray):
-    """(slot, found) for each (doc, node_id) pair — missing members (the
-    reference's redaction/incomplete-extract case) report found=False."""
-    sk = wa["sorted_mem_keys"]
-    if len(sk) == 0:
-        z = np.zeros(len(doc), dtype=np.int64)
-        return z, np.zeros(len(doc), dtype=bool)
-    keys = doc * wa["k_ids"] + np.searchsorted(wa["all_ids"], ref_id)
-    pos = np.minimum(np.searchsorted(sk, keys), len(sk) - 1)
-    found = sk[pos] == keys
-    return np.where(found, wa["mem_order"][pos], 0), found
-
-
-def _member_asof(wa: dict, slot: np.ndarray, found: np.ndarray, t: np.ndarray):
-    """As-of member version index per (slot, t); valid=False when the
-    member has no version yet, is invisible, or has null coords
-    (the filter chain of OSHDBGeometryBuilder._resolve refs, ref :87-93)."""
-    if len(wa["m_combined"]) == 0:
-        return np.zeros(len(slot), dtype=np.int64), np.zeros(len(slot), dtype=bool)
-    mpos = (
-        np.searchsorted(wa["m_combined"], slot * (1 << 34) + t, side="right") - 1
-    )
-    valid = found & (mpos >= wa["m_starts"][slot])
-    mp = np.where(valid, mpos, 0)
-    valid &= wa["m_vis"][mp] & (wa["m_lon"][mp] != _LON_SENTINEL)
-    return mp, valid
-
-
-def _area_flags(decider, parsed_tags: np.ndarray) -> tuple[np.ndarray, bool]:
-    """(tags_area per unique tag-dict, require_closed_refs). Callers route
-    custom deciders to the general path; the three built-in interpreters
-    vectorize (BaseTagInterpreter.java:18-158 semantics)."""
-    if isinstance(decider, AlwaysArea):
-        return np.ones(len(parsed_tags), dtype=bool), False
-    if isinstance(decider, NeverArea):
-        return np.zeros(len(parsed_tags), dtype=bool), False
-    assert isinstance(decider, DefaultTagInterpreter)
-    return (
-        np.fromiter(
-            (decider._tags_area(t) for t in parsed_tags),
-            dtype=bool,
-            count=len(parsed_tags),
-        ),
-        True,
-    )
-
-
-def _doc_tokens(pdf: pd.DataFrame) -> np.ndarray:
-    """Per-doc Hilbert cell token; '' for docs with no coordinates at all
-    (null bbox — matches _doc_structs's empty-token case)."""
-    nulls = pdf["bbox_min_lon"].isna().to_numpy()
-    toks = cells.token_of_bboxes(
-        pdf["bbox_min_lon"].fillna(0).to_numpy(np.int64),
-        pdf["bbox_min_lat"].fillna(0).to_numpy(np.int64),
-        pdf["bbox_max_lon"].fillna(0).to_numpy(np.int64),
-        pdf["bbox_max_lat"].fillna(0).to_numpy(np.int64),
-    )
-    toks = np.asarray(toks, dtype=object)
-    toks[nulls] = ""
-    return toks
-
-
-def _resolve_way_geometry(
-    wa: dict,
-    ps: np.ndarray,
-    sdoc: np.ndarray,
-    st: np.ndarray,
-    tags_area: np.ndarray,
-    need_closed_refs: bool,
-):
-    """Resolve geometry for (own-version index ps, doc sdoc, time st) rows:
-    each ref id → member as-of coordinate (skipping missing/invisible/
-    coordless members), then the way geometry ladder decision
-    (OSHDBGeometryBuilder.java:81-110). Returns
-    (kind, ncoords, cstart, c_row, c_lon7, c_lat7) where kind is
-    0 empty Point / 1 Point / 2 LineString / 3 Polygon."""
-    refcnt, ref_flat, ref_starts = wa["refcnt"], wa["ref_flat"], wa["ref_starts"]
-    n_out = len(ps)
-    rn = refcnt[ps]
-    total = int(rn.sum())
-    cand_row = np.repeat(np.arange(n_out, dtype=np.int64), rn)
-    local = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(rn) - rn, rn)
-    cand_ref = ref_flat[np.repeat(ref_starts[ps], rn) + local]
-    slot, found = _member_slots(wa, sdoc[cand_row], cand_ref)
-    mp, valid = _member_asof(wa, slot, found, st[cand_row])
-
-    c_row = cand_row[valid]
-    c_lon7 = wa["m_lon"][mp[valid]]
-    c_lat7 = wa["m_lat"][mp[valid]]
-    ncoords = np.bincount(c_row, minlength=n_out).astype(np.int64)
-    cstart = np.cumsum(ncoords) - ncoords
-
-    # polygon decision: decider(tags, refs) ∧ resolved ring closed (≥4,
-    # first == last coord) — fixed-point equality, ref :94-98
-    nz = ncoords >= 4
-    coords_closed = np.zeros(n_out, dtype=bool)
-    if nz.any():
-        fi, li = cstart[nz], cstart[nz] + ncoords[nz] - 1
-        coords_closed[nz] = (c_lon7[fi] == c_lon7[li]) & (c_lat7[fi] == c_lat7[li])
-    is_area = tags_area.copy()
-    if need_closed_refs and len(ref_flat):
-        zero = rn == 0
-        fr = ref_flat[np.where(zero, 0, ref_starts[ps])]
-        lr = ref_flat[np.where(zero, 0, ref_starts[ps] + rn - 1)]
-        is_area &= (rn >= 4) & (fr == lr)
-    elif need_closed_refs:
-        is_area &= False
-    kind = np.select(
-        [is_area & coords_closed, ncoords >= 2, ncoords == 1], [3, 2, 1], 0
-    ).astype(np.int64)
-    return kind, ncoords, cstart, c_row, c_lon7, c_lat7
-
-
-_NAN_POINT = np.frombuffer(
-    np.array([np.nan, np.nan], dtype="<f8").tobytes(), dtype=np.uint8
-)
-
-
-def _way_wkb_nbytes(kind: np.ndarray, ncoords: np.ndarray) -> np.ndarray:
-    """Encoded byte length per row for the geometry-ladder WKB kinds."""
-    return np.select(
-        [kind <= 1, kind == 2, kind == 4],
-        [21, 9 + 16 * ncoords, 9],
-        13 + 16 * ncoords,
-    ).astype(np.int64)
-
-
-def _way_wkb_write(
-    buf: np.ndarray,
-    offs: np.ndarray,
-    kind: np.ndarray,
-    ncoords: np.ndarray,
-    cstart: np.ndarray,
-    c_row: np.ndarray,
-    x: np.ndarray,
-    y: np.ndarray,
-) -> None:
-    """Write each row's WKB at buf[offs[r]:] — caller-placed encoding so
-    collections can embed components at their final positions with zero
-    copy passes."""
-    buf[offs] = 1  # little-endian marker
-    # geometry type code (u32 LE; codes < 256 so one byte suffices)
-    buf[offs + 1] = np.select([kind == 0, kind == 4], [1, 2], kind)
-
-    def put_u32(pos: np.ndarray, val: np.ndarray):
-        for b in range(4):
-            buf[pos + b] = (val >> (8 * b)) & 0xFF
-
-    ls = kind == 2
-    pg = kind == 3
-    if ls.any():
-        put_u32(offs[ls] + 5, ncoords[ls])
-    if pg.any():
-        put_u32(offs[pg] + 5, np.ones(int(pg.sum()), dtype=np.int64))
-        put_u32(offs[pg] + 9, ncoords[pg])
-    empty = kind == 0
-    if empty.any():
-        buf[offs[empty][:, None] + (5 + np.arange(16))[None, :]] = _NAN_POINT[None, :]
-    if len(x):
-        pair_u8 = (
-            np.ascontiguousarray(np.stack([x, y], axis=1), dtype="<f8")
-            .view(np.uint8)
-            .reshape(-1, 16)
-        )
-        coord_base = offs + np.select([kind == 1, kind == 2], [5, 9], 13)
-        local = np.arange(len(x), dtype=np.int64) - cstart[c_row]
-        dest = coord_base[c_row] + 16 * local
-        buf[dest[:, None] + np.arange(16)[None, :]] = pair_u8
-
-
-def _way_wkb_buf(
-    kind: np.ndarray,
-    ncoords: np.ndarray,
-    cstart: np.ndarray,
-    c_row: np.ndarray,
-    x: np.ndarray,
-    y: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized ISO little-endian WKB for the way geometry ladder —
-    byte-identical to geo.geom.to_wkb. kind: 0 empty Point, 1 Point,
-    2 LineString, 3 Polygon(single ring), 4 empty LineString (invisible
-    way members inside relation collections, OSHDBGeometryBuilder.java:
-    83-84). Coords (x, y degrees) are grouped by output row (c_row
-    ascending), segment offsets in cstart.
-
-    Returns the CONTIGUOUS (buf, offs, nbytes) encoding — row r's WKB is
-    buf[offs[r] : offs[r] + nbytes[r]]."""
-    nbytes = _way_wkb_nbytes(kind, ncoords)
-    offs = np.cumsum(nbytes) - nbytes
-    buf = np.zeros(int(nbytes.sum()), dtype=np.uint8)
-    _way_wkb_write(buf, offs, kind, ncoords, cstart, c_row, x, y)
-    return buf, offs, nbytes
-
-
-def _way_wkb_vec(
-    kind: np.ndarray,
-    ncoords: np.ndarray,
-    cstart: np.ndarray,
-    c_row: np.ndarray,
-    x: np.ndarray,
-    y: np.ndarray,
-) -> list[bytes]:
-    """Per-row bytes view of _way_wkb_buf (kernel emission form)."""
-    buf, offs, nbytes = _way_wkb_buf(kind, ncoords, cstart, c_row, x, y)
-    return [buf[o : o + nb].tobytes() for o, nb in zip(offs, nbytes)]
+    """Vectorized snapshot kernel for member-less node docs: the point
+    geometry comes straight from the as-of state (the queryTs/O5 reuse
+    rule is subsumed), boundary docs get the exact point-in-AOI test."""
+    o = own_table(pdf)
+    return snapshot_frame(pdf, "node", o, requested, with_geometry,
+                          point_geometry(o), point_presence(pdf, o, aoi))
 
 
 def _ways_snapshot_vec(
     pdf: pd.DataFrame, requested: list[int], with_geometry: bool, decider
 ) -> pd.DataFrame:
-    """Fully vectorized snapshot kernel for fully-inside WAY docs.
-
-    Equivalent to the general path's mod-timestamp + queryTs walk
-    (CellIterator.java:181-347): a snapshot row exists at t iff the as-of
-    own version is visible, matches the filter, and has refs; its geometry
-    resolves each ref to the member node's as-of state. Direct per-t
-    computation matches the carry-forward optimization because any member
-    or own change between two requested timestamps is by construction a
-    modification timestamp (filter-aware member windows cover the visible
-    matching span)."""
-    import json
-
-    fa = _flat_node_arrays(pdf)
-    n_docs, starts = fa["n_docs"], fa["starts"]
-    combined = fa["combined"]
-    vis, match = fa["visible"], fa["match"]
-    wa = _flat_way_arrays(pdf)
-    refcnt = wa["refcnt"]
-
-    uniq, inv = np.unique(fa["tags"].astype(str), return_inverse=True)
-    parsed = np.array([json.loads(s) for s in uniq], dtype=object)
-    tags_area_u, need_closed_refs = _area_flags(decider, parsed)
-
-    n_ts = len(requested)
-    row_doc = np.tile(np.arange(n_docs, dtype=np.int64), n_ts)
-    row_t = np.repeat(np.asarray(requested, dtype=np.int64), n_docs)
-    pos = np.searchsorted(combined, row_doc * (1 << 34) + row_t, side="right") - 1
-    ok = pos >= starts[row_doc]
-    p = np.where(ok, pos, 0)
-    # zero-node ways skip (CellIterator.java:254-257)
-    ok &= vis[p] & match[p] & (refcnt[p] > 0)
-    sel = np.nonzero(ok)[0]
-    if len(sel) == 0:
-        return _empty_frame(_SNAP_COLS)
-    ps, sdoc, st = pos[sel], row_doc[sel], row_t[sel]
-
-    kind, ncoords, cstart, c_row, c_lon7, c_lat7 = _resolve_way_geometry(
-        wa, ps, sdoc, st, tags_area_u[inv[ps]], need_closed_refs
-    )
-    n_out = len(sel)
-
-    if with_geometry:
-        wkb = np.array(
-            _way_wkb_vec(
-                kind, ncoords, cstart, c_row, c_lon7 * 1e-7, c_lat7 * 1e-7
-            ),
-            dtype=object,
-        )
-    else:
-        wkb = np.full(n_out, None, dtype=object)
-
-    tokens = _doc_tokens(pdf)
-    ids = pdf["id"].to_numpy(np.int64)
-    doc_ids = pdf["doc_id"].to_numpy(object)
-    return pd.DataFrame(
-        {
-            "ts": st,
-            "entity_type": "way",
-            "id": ids[sdoc],
-            "version": fa["version"][ps].astype(np.int32),
-            "changeset": fa["changeset"][ps],
-            "uid": fa["uid"][ps].astype(np.int32),
-            "tags": parsed[inv[ps]],
-            "geom_wkb": wkb,
-            "geom_clipped_wkb": wkb,
-            "cell": tokens[sdoc],
-            "doc_id": doc_ids[sdoc],
-        },
-        columns=_SNAP_COLS,
-    )
+    """Vectorized snapshot kernel for fully-inside WAY docs: a row exists
+    at t iff the as-of own version is visible, matches and has refs; its
+    geometry resolves each ref to the member node's as-of state."""
+    o, mt = own_table(pdf), member_table(pdf, "way")
+    return snapshot_frame(pdf, "way", o, requested, with_geometry,
+                          way_geometry(o, mt, decider), has_refs(mt))
 
 
 def _vectorizable_decider(decider) -> bool:
@@ -1295,21 +758,19 @@ def _allowed_types(filter_spec) -> set[str] | None:
     return types
 
 
-def _route_way_fast(pdf: pd.DataFrame, way_mask: np.ndarray, aoi: AOI):
-    """Refine the JVM way-fast routing under a polygon AOI with the exact
-    per-doc bbox_vs_polygon 3-state (the FastBboxIn/OutsidePolygon cull,
-    CellIterator.java:182-215): fully-inside docs stay on the vectorized
-    path, boundary docs demote to the general per-doc path (they need the
-    exact clip), disjoint docs drop. Returns (vec_mask, demote_mask)."""
-    if aoi.polygon is None or not way_mask.any():
-        return way_mask, np.zeros(len(pdf), dtype=bool)
-    rel = _doc_rel_vec(pdf[way_mask], aoi)
-    idx = np.nonzero(way_mask)[0]
-    vec = np.zeros(len(pdf), dtype=bool)
-    dem = np.zeros(len(pdf), dtype=bool)
-    vec[idx] = rel == 1
-    dem[idx] = rel == 2
-    return vec, dem
+def _kernel_input(docs: DataFrame, filter_spec, aoi: AOI, decider) -> DataFrame:
+    """prepared_docs as both views feed it to the vectorized core: way
+    tables when the area decider is a vectorizable built-in, relation
+    tables per relation_vec.rel_fast_mode, and neither for a query whose
+    type filter excludes that kind."""
+    types = _allowed_types(filter_spec)
+    return prepared_docs(
+        docs, filter_spec, aoi, fast_arrays=True,
+        fast_ways=_vectorizable_decider(decider)
+        and (types is None or "way" in types),
+        fast_rels=rel_fast_mode(decider)
+        if types is None or "relation" in types else None,
+    )
 
 
 def snapshots(
@@ -1325,79 +786,28 @@ def snapshots(
     the entity exists, is visible, matches the filter, and intersects the
     AOI. Returns a DataFrame with schema model.schemas.SNAPSHOTS.
 
-    Member-less node docs run through the vectorized numpy path
-    (_nodes_snapshot_vec); ways/relations/python-filtered docs go through
-    the general per-doc path."""
+    Node, way and relation docs the vectorized core can take (see
+    prepared_docs) run through it batch-wide, at any AOI — under a polygon
+    AOI, ways and relations crossing its boundary need the exact clip and
+    demote; python-filtered docs, custom area deciders and nested
+    relations take the general per-doc walk (_emit_doc_snapshots)."""
     aoi = AOI(bbox=bbox, polygon=polygon)
     decider = area_decider or DEFAULT_INTERPRETER
     requested = sorted(timestamps)
     flt = compile_python(filter_spec)
-    # way/relation fast paths: any AOI (bbox AND polygon — the kernel's
-    # exact 3-state keeps fully-inside docs vectorized and demotes
-    # boundary docs), as long as the area decider is a vectorizable
-    # built-in; relations additionally need a decider mode that can rule
-    # out multipolygon assembly JVM-side (relation_vec.rel_fast_mode)
-    from .relation_vec import rel_fast_mode, rels_snapshot_vec
-
-    types = _allowed_types(filter_spec)
-    fast_ways = _vectorizable_decider(decider) and (
-        types is None or "way" in types
+    return dispatch(
+        _kernel_input(docs, filter_spec, aoi, decider),
+        schemas.SNAPSHOTS,
+        {
+            "node": lambda p: _nodes_snapshot_vec(p, requested, aoi, with_geometry),
+            "way": lambda p: _ways_snapshot_vec(p, requested, with_geometry, decider),
+            "relation": lambda p: rels_snapshot_vec(
+                p, requested, with_geometry, decider),
+        },
+        lambda row, tok, out: _emit_doc_snapshots(
+            row, requested, aoi, flt, decider, with_geometry, out, token=tok),
+        aoi,
     )
-    fast_rels = (
-        rel_fast_mode(decider)
-        if types is None or "relation" in types
-        else None
-    )
-    typed = prepared_docs(
-        docs, filter_spec, aoi, fast_arrays=True, fast_ways=fast_ways,
-        fast_rels=fast_rels,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            fk = pdf["fast_kind"]
-            node_mask = (fk == "node").to_numpy()
-            way_raw = (fk == "way").to_numpy()
-            rel_raw = (fk == "relation").to_numpy()
-            way_mask, way_demote = _route_way_fast(pdf, way_raw, aoi)
-            rel_mask, rel_demote = _route_way_fast(pdf, rel_raw, aoi)
-            gen_mask = (
-                ~(node_mask | way_raw | rel_raw) | way_demote | rel_demote
-            )
-            frames = []
-            if node_mask.any():
-                frames.append(
-                    _nodes_snapshot_vec(
-                        pdf[node_mask], requested, aoi, with_geometry
-                    )
-                )
-            if way_mask.any():
-                frames.append(
-                    _ways_snapshot_vec(
-                        pdf[way_mask], requested, with_geometry, decider
-                    )
-                )
-            if rel_mask.any():
-                frames.append(
-                    rels_snapshot_vec(
-                        pdf[rel_mask], requested, with_geometry, decider
-                    )
-                )
-            if gen_mask.any():
-                gpdf = pdf[gen_mask]
-                gtoks = _doc_tokens(gpdf)
-                out: list[tuple] = []
-                for row, tok in zip(gpdf.to_dict("records"), gtoks):
-                    _emit_doc_snapshots(
-                        row, requested, aoi, flt, decider, with_geometry, out,
-                        token=tok,
-                    )
-                frames.append(pd.DataFrame(out, columns=_SNAP_COLS))
-            yield pd.concat(frames, ignore_index=True) if frames else _empty_frame(_SNAP_COLS)
-
-    return typed.mapInPandas(kernel, schema=schemas.SNAPSHOTS)
 
 
 def _emit_doc_snapshots(row, requested, aoi, flt, decider, with_geometry, out,

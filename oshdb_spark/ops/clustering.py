@@ -226,12 +226,18 @@ def kmeans_assign(
 
     @F.pandas_udf(T.IntegerType())
     def _assign(s: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in s])
-        # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² is constant per row,
-        # so argmin over (-2x·c + ||c||²) suffices — np.argmin takes the
-        # FIRST minimal index (the lowest-centroid tie rule)
-        d = -2.0 * (X @ C.T) + c2[None, :]
-        return pd.Series(np.argmin(d, axis=1).astype(np.int32))
+        # NULL vectors get −1, as in the expression fold (its NULL
+        # distances never replace the seed)
+        out = np.full(len(s), -1, dtype=np.int32)
+        valid = s.notna().to_numpy()
+        if valid.any():
+            X = np.stack([np.asarray(v, dtype=np.float64) for v in s[valid]])
+            # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² is constant per
+            # row, so argmin over (-2x·c + ||c||²) suffices — np.argmin
+            # takes the FIRST minimal index (the lowest-centroid tie rule)
+            d = -2.0 * (X @ C.T) + c2[None, :]
+            out[valid] = np.argmin(d, axis=1)
+        return pd.Series(out)
 
     return df.withColumn(out, _assign(F.col(vec_col)))
 

@@ -166,11 +166,15 @@ def _ivf_route_arrow(df: DataFrame, cents, vec_col: str, out: str) -> DataFrame:
 
     @F.pandas_udf(IntegerType())
     def _route(s):
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in s])
-        sims = X @ Cn.T
-        best = np.argmax(sims, axis=1).astype(np.int32)
-        vnorm2 = (X * X).sum(axis=1)
-        best[vnorm2 == 0.0] = -1
+        # NULL vectors get −1, as in the fold (its NULL similarities
+        # never replace the seed)
+        best = np.full(len(s), -1, dtype=np.int32)
+        valid = s.notna().to_numpy()
+        if valid.any():
+            X = np.stack([np.asarray(v, dtype=np.float64) for v in s[valid]])
+            b = np.argmax(X @ Cn.T, axis=1).astype(np.int32)
+            b[(X * X).sum(axis=1) == 0.0] = -1
+            best[valid] = b
         return pd.Series(best)
 
     return df.withColumn(out, _route(F.col(vec_col).cast("array<double>")))

@@ -261,6 +261,30 @@ class TestWkb:
             6371000.0 * math.radians(1), rel=1e-9
         )
 
+    def test_collection_measures_sum_nested_components(self):
+        """A GeometryCollection's length (area) sums every linear (areal)
+        component, including MultiLineStrings (MultiPolygons) and nested
+        collections — a relation clipped across a polygon AOI becomes a
+        collection holding a MultiLineString."""
+        from oshdb_spark.geo.measures import _area_slow, _length_slow
+
+        one_deg = 6371000.0 * math.radians(1)
+        mls = ("MultiLineString", [np.array([[0, 0], [0, 1]], dtype=float),
+                                   np.array([[1, 0], [1, 1]], dtype=float)])
+        gc = ("GeometryCollection", [
+            mls,
+            ("GeometryCollection", [G.linestring([[2, 0], [2, 1]])]),
+            G.point(5, 5),
+        ])
+        assert _length_slow(G.to_wkb(gc)) == pytest.approx(3 * one_deg, rel=1e-9)
+        sq = [np.array([[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], dtype=float)]
+        mp = ("MultiPolygon", [sq, [ring + 3 for ring in sq]])
+        gcp = ("GeometryCollection", [mp, ("GeometryCollection", [("Polygon", sq)])])
+        want = 2 * _area_slow(G.to_wkb(("Polygon", sq))) + _area_slow(
+            G.to_wkb(("Polygon", [ring + 3 for ring in sq])))
+        assert _area_slow(G.to_wkb(gcp)) == pytest.approx(want, rel=1e-12)
+        assert want > 0
+
 
 class TestGeoGoldenPort:
     """GeoTest.java ports (oshdb-util/src/test/.../geometry/GeoTest.java)

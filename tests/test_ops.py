@@ -270,6 +270,43 @@ def test_kmeans_assign_large_k_matches_expression_path(spark):
     assert set(got_matrix.values()) == set(range(k))
 
 
+def test_arrow_routing_null_vector_matches_expression_path(spark):
+    """k > 64 centroids take the Arrow pandas UDFs (ivf routing, kmeans
+    assignment); a NULL vector row must get what the ≤64-centroid
+    expression fold returns for it (forced by raising the threshold),
+    with the other rows of its batch unaffected."""
+    import numpy as np
+
+    import oshdb_spark.ops.clustering as CL
+    import oshdb_spark.ops.similarity as SIM
+
+    rng = np.random.default_rng(5)
+    k, dim = 80, 4
+    cents = rng.uniform(-10, 10, size=(k, dim)).round(3).tolist()
+    rows = [(i, [float(x) for x in np.asarray(cents[i]) + 0.001]) for i in range(12)]
+    rows.append((99, None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def run():
+        kk = {r["vec_id"]: r["cluster"] for r in CL.kmeans_assign(df, cents).collect()}
+        ivf = {
+            r["vec_id"]: r["_cent"]
+            for r in SIM._ivf_route_arrow(df, cents, "embedding", "_cent").collect()
+        }
+        return kk, ivf
+
+    kk, ivf = run()
+    orig = CL._EXPR_ARGMIN_MAX_K
+    CL._EXPR_ARGMIN_MAX_K = 10_000
+    try:
+        kk_expr = {r["vec_id"]: r["cluster"] for r in CL.kmeans_assign(df, cents).collect()}
+    finally:
+        CL._EXPR_ARGMIN_MAX_K = orig
+    assert kk == kk_expr
+    assert kk[99] == -1 and ivf[99] == -1
+    assert all(kk[i] == i and ivf[i] == i for i in range(12))
+
+
 def test_kmeans_train_arrow_path_matches_codegen_path(spark):
     """Forcing the large-k/dim Arrow partial-stats update (threshold 0)
     must reproduce the codegen iteration bitwise on integer-coordinate
